@@ -474,8 +474,6 @@ _JACCARD_THRESHOLD = 0.5
 # band self-join for identical input bytes. The cache itself lives in
 # ``session_cache.fixture_cached`` (content-keyed on the documents
 # parquet, shared with llm/text.py's term-counts/tf-idf core).
-# Back-compat alias (pre-r9 name, kept so external probes keep working)
-_SHINGLE_INDEX_CACHE = session_cache._CACHE
 
 
 def _funnel_cached(

@@ -14,6 +14,18 @@ oracle and for scale:
 - **shuffle.partitions** defaults to the local core count; on a real
   cluster this would be sized to ~128 MB per post-shuffle partition
   (AQE coalescing makes the initial value a ceiling, not a target).
+- **Worker daemon** (``pyworker``): every Python task (MR jobs,
+  pandas UDFs, ``applyInPandasWithState``) used to spend about 200 ms
+  re-reading the directories of ``pyspark.zip``, the py4j zip and the
+  ``spark-core`` jar, which PySpark's per-task
+  ``importlib.invalidate_caches()`` forces. The engine's daemon drops
+  those archives from the worker path when the interpreter has the same
+  pyspark/py4j release unpacked. Measured on a 4-core VM under
+  ``local[2]``: ``invalidate_caches`` per task 199 ms → 0.06 ms; a
+  one-task ``parallelize(...).count()`` 185 → 92 ms and a 4-task
+  ``mapInPandas`` count 620 → 305 ms (medians). The engine's parent
+  directory goes on the workers' ``PYTHONPATH`` so that they can import
+  the daemon from any working directory.
 """
 
 from __future__ import annotations
@@ -21,6 +33,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory that holds the ``mapreducepy_spark`` package.
+_ENGINE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -62,6 +77,8 @@ def get_spark(
         # (static mode would wipe the whole table)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "mapreducepy_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if extra_conf:

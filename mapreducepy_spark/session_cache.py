@@ -9,9 +9,10 @@ exactly the mechanism behind the BENCH_r08 ``dedup_near_verified``
 4.102 s ceiling trip and the ``dedup_minhash_est`` / ``text_keywords``
 2 s tripwire crossings (VERDICT r8 work orders #2/#3).
 
-The cache key is (applicationId, source table identity, mtime_ns,
-size, artifact tag): a new Spark session, a different fixture path,
-or regenerated fixture bytes all mint fresh entries, so a cached
+The cache key is (applicationId, artifact tag, source table path,
+``fingerprint`` of its content): a new Spark session, a different
+fixture path, or regenerated fixture bytes — a one-file table or any
+part-file of a directory table — all mint fresh entries, so a cached
 table can never serve stale data for changed input. Entries are
 ``localCheckpoint``-ed DataFrames; eviction only dereferences — the
 checkpoint blocks free once the last consumer plan drops.
@@ -25,6 +26,7 @@ per (session, input), never once per consumer query.
 from __future__ import annotations
 
 import os
+import stat
 import time
 from collections.abc import Callable
 
@@ -41,6 +43,25 @@ _CACHE_MAX = 24
 # session caches (the corpus chunk broadcasts and IVF quantizer in
 # llm/similarity.py) call ``note_fill`` for the same ledger.
 _FILL_LOG: list[dict] = []
+
+
+def fingerprint(path: str) -> tuple:
+    """Content identity of a dataset path: ``(mtime_ns, size)`` for a
+    file; for a directory, the sorted ``(relative path, mtime_ns,
+    size)`` of every regular file under it, so rewriting any part-file
+    in place changes it. Raises ``OSError`` when ``path`` cannot be
+    stat-ed (missing, or not a local path)."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    parts = []
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            st = os.stat(full)
+            if stat.S_ISREG(st.st_mode):
+                parts.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+    return tuple(sorted(parts))
 
 
 def note_fill(tag: str, sec: float) -> None:
@@ -76,13 +97,13 @@ def scalar_cached(
     ``fixture_cached`` rule: no content-free keys)."""
     src = os.path.abspath(f"{sf_dir}/{table}.parquet")
     try:
-        st = os.stat(src)
+        fp = fingerprint(src)
     except OSError:
         t0 = time.perf_counter()
         out = compute()
         note_fill(tag, time.perf_counter() - t0)
         return out
-    key = (spark.sparkContext.applicationId, tag, src, st.st_mtime_ns, st.st_size)
+    key = (spark.sparkContext.applicationId, tag, src, fp)
     if key in _SCALARS:
         return _SCALARS[key]
     t0 = time.perf_counter()
@@ -106,8 +127,7 @@ def fixture_cached(
     checkpointed table to every later caller. Bounded FIFO."""
     src = os.path.abspath(f"{sf_dir}/{table}.parquet")
     try:
-        st = os.stat(src)
-        fp: tuple | None = (st.st_mtime_ns, st.st_size)
+        fp = fingerprint(src)
     except OSError:
         # Non-stat-able layout: build + checkpoint but DO NOT cache —
         # a content-free key could serve a stale table if the fixture

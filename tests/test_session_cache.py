@@ -104,3 +104,125 @@ def test_cached_result_values_equal_fresh_build(spark, sf_dir):
             fresh.sort_values(key).reset_index(drop=True)
         )
     )
+
+
+def _split_parts(src: str, dst: str, n: int = 16) -> None:
+    """Write every table of ``src`` as ``n`` part-files under
+    ``dst/<table>.parquet/``."""
+    import pyarrow.parquet as pq
+
+    from mapreducepy_spark.io import TABLES
+
+    for t in TABLES:
+        tbl = pq.read_table(f"{src}/{t}.parquet")
+        os.makedirs(f"{dst}/{t}.parquet")
+        step = -(-tbl.num_rows // n)
+        for i in range(n):
+            pq.write_table(
+                tbl.slice(i * step, step), f"{dst}/{t}.parquet/part-{i:05d}.parquet"
+            )
+
+
+def _write_events_parts(d, hours: list[list[int]]) -> str:
+    """An events fixture as a directory of part-files, one per inner
+    list of hours (2024-01-01 + h hours, one event each)."""
+    os.makedirs(d / "events.parquet", exist_ok=True)
+    eid = 0
+    for i, part in enumerate(hours):
+        rows = []
+        for h in part:
+            eid += 1
+            rows.append((eid, pd.Timestamp("2024-01-01") + pd.Timedelta(hours=h),
+                         1, "view", 1.0, None))
+        pdf = pd.DataFrame(
+            rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
+        )
+        pdf["event_id"] = pdf["event_id"].astype("Int64")
+        pdf["props"] = pdf["props"].astype("string")
+        pdf.to_parquet(d / "events.parquet" / f"part-{i}.parquet", index=False)
+    return str(d)
+
+
+def test_fingerprint_sees_in_place_part_rewrite(tmp_path):
+    sf = _write_events_parts(tmp_path, [[0, 1], [2, 3]])
+    path = f"{sf}/events.parquet"
+    before = session_cache.fingerprint(path)
+    dir_stat = os.stat(path)
+    _write_events_parts(tmp_path, [[0, 1], [2, 3, 4]])
+    st = os.stat(path)
+    # the premise: the directory's own stat does not move
+    assert (st.st_mtime_ns, st.st_size) == (dir_stat.st_mtime_ns, dir_stat.st_size)
+    assert session_cache.fingerprint(path) != before
+    f = f"{path}/part-0.parquet"
+    assert session_cache.fingerprint(f) == (os.stat(f).st_mtime_ns, os.stat(f).st_size)
+    with pytest.raises(OSError):
+        session_cache.fingerprint(str(tmp_path / "missing.parquet"))
+
+
+def test_directory_fixture_part_rewrite_gives_fresh_bounds(spark, tmp_path):
+    """``scalar_cached`` packing bounds over a part-file directory must
+    follow an in-place rewrite of one part (stale bounds gate the
+    packed argmin plan of agg_minmax_by / events_ohlc)."""
+    from mapreducepy_spark.operators.aggregates import _events_argminmax_bounds
+
+    sf = _write_events_parts(tmp_path, [[0, 1], [2, 3]])
+    b1 = _events_argminmax_bounds(spark, sf)
+    _write_events_parts(tmp_path, [[0, 1], [2, 3, 50]])
+    b2 = _events_argminmax_bounds(spark, sf)
+    assert b2["t_hi"] - b1["t_hi"] == 47 * 3600 * 10**6
+    assert b2["id_hi"] == 5
+
+
+def test_second_load_runs_no_job(spark, tmp_path):
+    from mapreducepy_spark.io import load
+
+    sf = _write_events_parts(tmp_path, [[0], [1]])
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("schema-memo-first", "first load")
+        load(spark, sf, "events")
+        sc.setJobGroup("schema-memo-second", "second load")
+        load(spark, sf, "events")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup("schema-memo-first")) >= 1
+    assert tracker.getJobIdsForGroup("schema-memo-second") == []
+
+
+@pytest.mark.parametrize("layout", ["one-file", "16-part"])
+def test_memoized_schema_equals_fresh_inference(spark, sf_dir, tmp_path, monkeypatch, layout):
+    from mapreducepy_spark import io
+
+    if layout == "16-part":
+        _split_parts(sf_dir, str(tmp_path))
+        sf_dir = str(tmp_path)
+    memo = {}
+    for t in io.TABLES:
+        io.load(spark, sf_dir, t)
+        memo[t] = io.load(spark, sf_dir, t)
+    monkeypatch.setattr(io, "_SCHEMAS", {})
+    fresh = {t: io.load(spark, sf_dir, t) for t in io.TABLES}
+    for t in io.TABLES:
+        assert memo[t].schema == fresh[t].schema, t
+    # the timestamp repair reads the same values through a given schema
+    fresh = fresh["events"]
+    assert memo["events"].exceptAll(fresh).count() == 0
+    assert fresh.exceptAll(memo["events"]).count() == 0
+
+
+def test_load_sees_part_rewritten_with_added_column(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreducepy_spark.io import load
+
+    # one part-file, so that fresh inference reads the rewritten footer
+    sf = _write_events_parts(tmp_path, [[0, 1]])
+    assert "extra" not in load(spark, sf, "events").columns
+    part = f"{sf}/events.parquet/part-0.parquet"
+    tbl = pq.read_table(part)
+    pq.write_table(tbl.append_column("extra", pa.array([7, 8], pa.int64())), part)
+    df = load(spark, sf, "events")
+    assert "extra" in df.columns
+    assert sorted(r["extra"] for r in df.collect()) == [7, 8]

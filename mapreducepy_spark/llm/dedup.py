@@ -23,7 +23,7 @@ from ..io import load, load_spread
 from ..operators.sampling import split_case_sql, split_col
 from ..registry import register
 from ..rounding import dround
-from ..warehouse import ensure_table, gc_stale_tables, warehouse_path
+from ..warehouse import ensure_table, gc_stale_tables, table_name, warehouse_path
 from . import DUCK_SHINGLES, SPARK_SHINGLES
 
 _ORACLE_DEDUP_EXACT = """
@@ -1926,7 +1926,7 @@ def _incremental_triage(
 # the name must pin everything the writer guarantees — LSH geometry,
 # bucket count, schema. Bump on any change; old dirs then stop
 # matching and age out via GC instead of re-registering stale layouts.
-_BANDIDX_WRITER_V = 1
+_BANDIDX_WRITER_V = 2
 
 # Bucket count of the stored index on its probe key (band, sig). The
 # at-scale contract: a delta probe join on (band, sig) against the
@@ -1951,22 +1951,18 @@ def _ensure_band_index(spark: SparkSession, sf_dir: str) -> str:
     by tests/test_bucketed.py and extended to this index by
     tests/test_band_index.py.
     """
-    import hashlib
     import os
     import re
 
     writer_tag = f"writer=v{_BANDIDX_WRITER_V}"
     src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    st = os.stat(src)
-    fps = [
+    recipe = [
         writer_tag,
         f"buckets={_BANDIDX_BUCKETS}",
         f"lsh={_N_HASHES}h/{_BAND_SIZE}r",
         "schema=doc_id,band,sig",
-        f"{src}\x00{st.st_mtime_ns}\x00{st.st_size}",
     ]
-    fp = hashlib.sha1("|".join(fps).encode()).hexdigest()[:12]
-    name = f"bandidx_{fp}"
+    name = table_name("bandidx", recipe, [src])
     wh = warehouse_path(spark)
     gc_stale_tables(
         spark,

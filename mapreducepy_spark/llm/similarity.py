@@ -37,7 +37,6 @@ results ⇒ identical hashes, with vectorized throughput.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -142,55 +141,21 @@ def _dround_np(arr: np.ndarray, d: int = 6) -> np.ndarray:
 _CHUNK_ROWS = 65536
 
 
-# Session-scoped cache of the corpus chunk broadcasts, keyed by
-# (applicationId, source file identity+content fingerprint, chunk
-# size). Five catalog keys fetch the SAME unit-normalized corpus
-# (sim_knn, dedup_embedding, both recall audits via _exact_topk, and
-# graph_knn_triangles through sim_knn); without the cache every
-# builder call — and every one of bench.py's 3 timed runs — re-pays
-# the driver fetch + broadcast of identical bytes (VERDICT r7 work
-# order #2: "share the corpus broadcasts"). mtime+size keys content:
-# a regenerated fixture mints a fresh entry (the
-# ensure_partitioned_fixture lesson). Bounded FIFO; evicted entries
-# are only dereferenced (never .destroy() — a returned DataFrame may
-# still lazily reference the broadcast), so the ContextCleaner
-# reclaims blocks when the last plan drops.
-_CORPUS_BC_CACHE: dict[tuple, list] = {}
-_CORPUS_BC_CACHE_MAX = 4
-
-
 def _corpus_broadcasts_for(spark: SparkSession, sf_dir: str) -> list:
-    """The standard corpus side shared by every exact-GEMM consumer:
-    ``embeddings`` → validity filter → chunked unit-matrix broadcasts,
-    cached per (session, fixture content, chunk size)."""
-    import os
+    """The standard corpus side shared by every exact-GEMM consumer
+    (``sim_knn``, ``dedup_embedding``, the exact top-K artifact and,
+    through it, the recall audits and ``graph_knn_triangles``):
+    ``embeddings`` → validity filter → chunked unit-matrix
+    broadcasts, once per (session, fixture content, chunk size)."""
 
-    src = os.path.abspath(f"{sf_dir}/embeddings.parquet")
-    cacheable = True
-    try:
-        st = os.stat(src)
-        fp: tuple | None = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        # Non-stat-able layout: build but DO NOT cache — a
-        # content-free key could serve stale broadcasts if the
-        # fixture appears/changes mid-session (ADVICE r13).
-        fp = None
-        cacheable = False
-    key = (spark.sparkContext.applicationId, src, fp, _CHUNK_ROWS)
-    if cacheable:
-        hit = _CORPUS_BC_CACHE.get(key)
-        if hit is not None:
-            return hit
-    t0 = time.perf_counter()
-    raw = load(spark, sf_dir, "embeddings")
-    emb = _valid_embeddings(raw).select("vec_id", "embedding")
-    chunks = _corpus_chunk_broadcasts(spark, emb, n_hint=raw.count())
-    session_cache.note_fill("corpus_bc", time.perf_counter() - t0)
-    if cacheable:
-        while len(_CORPUS_BC_CACHE) >= _CORPUS_BC_CACHE_MAX:
-            _CORPUS_BC_CACHE.pop(next(iter(_CORPUS_BC_CACHE)))
-        _CORPUS_BC_CACHE[key] = chunks
-    return chunks
+    def compute() -> list:
+        raw = load(spark, sf_dir, "embeddings")
+        emb = _valid_embeddings(raw).select("vec_id", "embedding")
+        return _corpus_chunk_broadcasts(spark, emb, n_hint=raw.count())
+
+    return session_cache.scalar_cached(
+        spark, sf_dir, "embeddings", f"corpus_bc/{_CHUNK_ROWS}", compute
+    )
 
 
 def _corpus_chunk_broadcasts(
@@ -374,52 +339,48 @@ def sim_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_topk(spark, sf_dir)
 
 
-def _exact_topk(spark: SparkSession, sf_dir: str, query_pred=None) -> DataFrame:
-    """``sim_knn``'s body with an optional QUERY-side predicate,
-    applied BEFORE the GEMM kernel — the corpus side always stays
-    complete (neighbors must come from the whole corpus), but the
-    O(n_q · n_corpus · d) work scales down with the query sample.
-    This is the deployment shape ``sim_ann_recall_sampled`` audits.
-
-    The no-predicate (full) result is served from the content-keyed
-    session cache: THREE keys consume the identical exact top-K table
+def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``sim_knn``'s result, served from the content-keyed session
+    cache: THREE keys consume the identical exact top-K table
     (``sim_knn``, ``sim_ann_recall``'s ground-truth side,
     ``graph_knn_triangles``' graph construction) and bench times each
     3×, so before round 9 the same GEMM ran up to 9× per session.
     The cached table is corpus×K rows — small enough to checkpoint at
     any scale where exact brute force is viable at all."""
+    return fixture_cached(
+        spark, sf_dir, "embeddings", "knn_exact",
+        lambda: _build_exact_topk(spark, sf_dir),
+    )
 
-    def build() -> DataFrame:
-        raw = load(spark, sf_dir, "embeddings")
-        emb = _valid_embeddings(raw).select("vec_id", "embedding")
-        q = _query_side(spark, emb)
-        if query_pred is not None:
-            q = q.filter(query_pred)
-        schema = "query_id bigint, neighbor_id bigint, cos_raw double"
-        partial = _union_chunk_results(
-            spark, q, _chunk_topk_kernel, schema,
-            _corpus_broadcasts_for(spark, sf_dir),
-        )
-        if partial is None:
-            return spark.createDataFrame(
-                [], "query_id bigint, neighbor_id bigint, cos_sim double"
-            )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            partial.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= _K)
-            .select(
-                "query_id",
-                "neighbor_id",
-                dround("cos_raw", 6).alias("cos_sim"),
-            )
-        )
 
-    if query_pred is None:
-        return fixture_cached(spark, sf_dir, "embeddings", "knn_exact", build)
-    return build()
+def _build_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The un-cached exact top-K plan: every valid vector queries the
+    whole corpus through the chunked GEMM kernel, and one row_number
+    window merges the per-chunk partials."""
+    raw = load(spark, sf_dir, "embeddings")
+    emb = _valid_embeddings(raw).select("vec_id", "embedding")
+    q = _query_side(spark, emb)
+    schema = "query_id bigint, neighbor_id bigint, cos_raw double"
+    partial = _union_chunk_results(
+        spark, q, _chunk_topk_kernel, schema,
+        _corpus_broadcasts_for(spark, sf_dir),
+    )
+    if partial is None:
+        return spark.createDataFrame(
+            [], "query_id bigint, neighbor_id bigint, cos_sim double"
+        )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        partial.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            dround("cos_raw", 6).alias("cos_sim"),
+        )
+    )
 
 
 # --- sign-LSH bucketed ANN ----------------------------------------
@@ -849,57 +810,28 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_CELLS = 16
 
 
-# Session-scoped quantizer cache, keyed exactly like the corpus
-# chunk broadcasts (applicationId, source identity+content, cell
-# count): three IVF keys bootstrap the SAME deterministic quantizer,
-# and before r13 every builder call — every one of bench.py's 3
-# timed runs per key — re-paid the TakeOrdered job + driver fetch +
-# broadcast of identical bytes. Bounded FIFO; evicted entries are
-# only dereferenced (ContextCleaner reclaims the blocks).
-_IVF_QUANT_CACHE: dict[tuple, object] = {}
-_IVF_QUANT_CACHE_MAX = 4
-
-
 def _ivf_quantizer(spark, sf_dir, emb):
     """The ONE deterministic coarse-quantizer bootstrap every IVF key
     shares (r13 review: previously copy-pasted three times): the
     ``_N_CELLS`` lowest-id valid vectors, unit-normalized and
-    broadcast, cached per (session, fixture content) since the r13
-    optimization round. Returns the broadcast handle, or None for an
-    empty / all-invalid corpus (the caller returns its empty frame —
-    not a numpy crash; found by the empty-tables sweep)."""
-    import os
+    broadcast, once per (session, fixture content). Returns the
+    broadcast handle, or None for an empty / all-invalid corpus (the
+    caller returns its empty frame — not a numpy crash; found by the
+    empty-tables sweep)."""
 
-    src = os.path.abspath(f"{sf_dir}/embeddings.parquet")
-    cacheable = True
-    try:
-        st = os.stat(src)
-        fp: tuple | None = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        # Non-stat-able layout: bootstrap but DO NOT cache — a
-        # content-free key could serve a stale quantizer (or stale
-        # None empty-verdict) if the fixture appears or is rewritten
-        # mid-session (ADVICE r13).
-        fp = None
-        cacheable = False
-    key = (spark.sparkContext.applicationId, src, fp, _N_CELLS)
-    if cacheable and key in _IVF_QUANT_CACHE:
-        return _IVF_QUANT_CACHE[key]
-    t0 = time.perf_counter()
-    cent_pdf = emb.orderBy(F.col("vec_id").asc()).limit(_N_CELLS).toPandas()
-    if len(cent_pdf) == 0:
-        bc = None  # content-keyed, so the empty verdict is stable too
-    else:
+    def compute():
+        cent_pdf = emb.orderBy(F.col("vec_id").asc()).limit(_N_CELLS).toPandas()
+        if len(cent_pdf) == 0:
+            return None
         cent = _np_unit(
             np.stack(cent_pdf["embedding"].to_list()).astype(np.float64)
         )
-        bc = spark.sparkContext.broadcast(cent)
-    session_cache.note_fill("ivf_quantizer", time.perf_counter() - t0)
-    if cacheable:
-        while len(_IVF_QUANT_CACHE) >= _IVF_QUANT_CACHE_MAX:
-            _IVF_QUANT_CACHE.pop(next(iter(_IVF_QUANT_CACHE)))
-        _IVF_QUANT_CACHE[key] = bc
-    return bc
+        return spark.sparkContext.broadcast(cent)
+
+    return session_cache.scalar_cached(
+        spark, sf_dir, "embeddings", f"ivf_quantizer/{_N_CELLS}", compute
+    )
+
 
 _ORACLE_SIM_ANN_IVF = f"""
 WITH {_DUCK_NORMED_CTE},
@@ -1343,10 +1275,9 @@ def sim_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: composes the registered multiprobe plan verbatim with the
     chunk-bounded exact brute-force as ground truth; at 100 TB the
-    audit samples its query side (``sim_ann_recall_sampled``'s
-    query_pred recipe applies unchanged). The ledger aggregation is
-    {_N_PROBE} output rows over K-row-per-query joins — free next to
-    the pair generation it audits.
+    audit samples its queries as ``sim_ann_recall_sampled`` does. The
+    ledger aggregation is {_N_PROBE} output rows over K-row-per-query
+    joins — free next to the pair generation it audits.
 
     Hash parity: the ``_recall_ledger`` discipline — hit counts are
     integer set-membership joins on bit-identical rank orders; regret
@@ -1808,28 +1739,17 @@ def sim_ann_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket hit/regret ledger over a deterministic 1-in-
     ``_RECALL_SAMPLE_EVERY`` query sample (``vec_id % 5 = 0``). The
     production ANN output is computed in full — that is the system
-    under audit — but the exact brute-force ground truth covers ONLY
-    sampled queries, so the O(n_q·n·d) audit cost drops with the
-    sample rate while the recall estimate stays unbiased per bucket.
-    This is the at-scale answer to the audit being intrinsically as
-    expensive as both plans it reconciles (the exhaustive key keeps
-    the exact contract; this key is what a 100 TB corpus actually
-    runs nightly).
+    under audit — but the ledger reconciles ONLY sampled queries, so
+    its joins and aggregation shrink with the sample rate while the
+    recall estimate stays unbiased per bucket.
 
-    Ground-truth sourcing (VERDICT r13 #4): per-query top-K is
-    independent per query, so filtering the query side BEFORE the
-    GEMM kernel and filtering the FULL exact table on query_id
-    return bit-identical rows (pinned by
-    ``test_query_side_sampling_preserves_per_query_answers``). When
-    a session already holds the shared ``knn_exact`` artifact — in
-    any session that also runs ``sim_knn`` / ``sim_ann_recall`` /
-    ``graph_knn_triangles``, i.e. every bench/oracle session — the
-    cheapest exact side is the artifact filtered on the sample, so
-    this key consumes it instead of re-running a 1-in-5 GEMM per
-    call. A deployment with no exact table runs the pred-before-GEMM
-    recipe (``_exact_topk``'s query_pred — the capability stays, and
-    its plan shape stays pinned by
-    ``test_sampled_recall_ground_truth_is_query_sampled``).
+    Ground-truth sourcing: the exact side is the shared ``knn_exact``
+    session artifact (``_exact_topk``) filtered on the sample —
+    per-query top-K is independent per query, so those rows are the
+    sampled queries' exact answers. The key's cold cost is therefore
+    the full exact GEMM over every query (paid once per session and
+    shared with ``sim_knn`` / ``sim_ann_recall`` /
+    ``graph_knn_triangles``); only warm runs cost the sample alone.
 
     Hash parity: identical ledger algebra — both oracles come from
     ONE SQL template (``_recall_oracle_sql``) differing only in the

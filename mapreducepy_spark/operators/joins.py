@@ -917,7 +917,7 @@ _N_BUCKETS = 8
 # any of that changes: old directories then simply stop matching the
 # new names (and are GC'd once their sources vanish) instead of
 # re-registering under a DDL the bytes no longer satisfy.
-_BUCKET_WRITER_V = 2
+_BUCKET_WRITER_V = 3
 
 # Grace windows re-exported from the shared lifecycle module (the
 # generic machinery was extracted to ``mapreducepy_spark.warehouse``
@@ -931,8 +931,8 @@ _GC_VERSION_GRACE_SEC = _wh.GC_VERSION_GRACE_SEC
 def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders and lineitem as BUCKETED + per-bucket-SORTED
     tables on their join key, once per fixture content, and return
-    the table names. Content-keyed names (path + mtime_ns + size) so
-    a regenerated fixture mints fresh tables and two sessions over
+    the table names. Content-keyed names (``warehouse.table_name``)
+    so a regenerated fixture mints fresh tables and two sessions over
     the same bytes share them; ``mode("overwrite")`` makes a fresh
     in-memory catalog over leftover files self-healing.
 
@@ -948,26 +948,21 @@ def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]
     provenance): the shared ``mapreducepy_spark.warehouse`` module —
     see its docstrings for the at-scale metastore semantics.
     """
-    import hashlib
     import os
-
     import re
 
     writer_tag = f"writer=v{_BUCKET_WRITER_V}"
-    fps = [
+    recipe = [
         writer_tag,
         f"buckets={_N_BUCKETS}",
         "sort=o_orderkey,l_orderkey",
         "schema=full",
     ]
-    srcs = []
-    for t in ("orders", "lineitem"):
-        src = os.path.abspath(f"{sf_dir}/{t}.parquet")
-        st = os.stat(src)
-        srcs.append(src)
-        fps.append(f"{src}\x00{st.st_mtime_ns}\x00{st.st_size}")
-    fp = hashlib.sha1("|".join(fps).encode()).hexdigest()[:12]
-    names = (f"orders_bkt_{fp}", f"lineitem_bkt_{fp}")
+    srcs = [os.path.abspath(f"{sf_dir}/{t}.parquet") for t in ("orders", "lineitem")]
+    names = (
+        _wh.table_name("orders_bkt", recipe, srcs),
+        _wh.table_name("lineitem_bkt", recipe, srcs),
+    )
     wh = _wh.warehouse_path(spark)
 
     # GC: test suites mint bucketed tables against tmp-dir fixtures

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..io import load
 from ..registry import register
 from ..rounding import dround
+from ..session_cache import derived_fixture
 
 _ORACLE_SCAN_PROJECT = """
 SELECT o_orderkey, o_custkey, o_totalprice
@@ -188,60 +189,28 @@ def ensure_partitioned_fixture(sf_dir: str) -> str:
     ``{sf_dir}/documents.parquet`` and return its directory. Minted
     driver-side by pyarrow's dataset writer (a foreign writer, like
     the ORC fixture, so Spark's partition discovery is exercised
-    against a layout it didn't produce). Deterministic content ⇒ an
-    existing directory is reused as-is; creation is atomic (unique
-    tmp dir + rename, loser of a concurrent race cleans up its tmp).
+    against a layout it didn't produce), once per source content
+    (``session_cache.derived_fixture``).
     """
-    import hashlib
     import os
-    import shutil
-    import threading
-    import uuid
 
     import pyarrow.parquet as pq
 
-    from ..sources.jsonl import _fixture_root
+    src = f"{sf_dir}/documents.parquet"
 
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    # Cache key includes the source's (mtime_ns, size): regenerating
-    # documents.parquet in place must mint a FRESH layout, not serve
-    # the stale one (ADVICE r7 — the path-only key silently failed
-    # parity against a rewritten source; mtime+size is the same
-    # content fingerprint the ORC fixture's rewrite-always avoids
-    # needing, without paying its every-call rewrite).
-    st = os.stat(src)
-    key = f"{src}\x00{st.st_mtime_ns}\x00{st.st_size}"
-    out = os.path.join(
-        _fixture_root(),
-        hashlib.sha1(key.encode()).hexdigest()[:16],
-        "documents_by_lang",
-    )
-    if os.path.isdir(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = (
-        f"{out}.tmp.{os.getpid()}.{threading.get_ident()}"
-        f".{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    def write(tmp: str) -> None:
         # pre-create tmp: write_to_dataset creates no directory at all
         # for a 0-row table (the empty-tables sweep), and the rename
         # must still install an (empty) layout
-        os.makedirs(tmp, exist_ok=True)
+        os.makedirs(tmp)
         pq.write_to_dataset(
             pq.read_table(src),
             root_path=tmp,
             partition_cols=["lang"],
             basename_template="part-{i}.parquet",
         )
-        os.rename(tmp, out)
-    except OSError:
-        if not os.path.isdir(out):  # a real failure, not a lost race
-            raise
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    return derived_fixture(src, "documents_by_lang", write)
 
 
 _ORACLE_SCAN_PARTITION_PRUNE = """
@@ -306,39 +275,19 @@ def ensure_evolved_fixture(sf_dir: str) -> str:
     the ORIGINAL five columns (even doc_ids), part-1 adds a sixth
     ``quality_u`` column (odd doc_ids; value = (doc_id % 100)·10⁴ —
     deterministic so the oracle can re-derive it). Both parts are
-    pyarrow-written (foreign writer), cache keyed by source content
-    (mtime+size), atomic tmp+rename — the ensure_partitioned_fixture
-    discipline."""
-    import hashlib
+    pyarrow-written (foreign writer), once per source content
+    (``session_cache.derived_fixture``)."""
     import os
-    import shutil
-    import threading
-    import uuid
 
     import pandas as pd
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..sources.jsonl import _fixture_root
+    src = f"{sf_dir}/documents.parquet"
 
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    st = os.stat(src)
-    key = f"{src}\x00{st.st_mtime_ns}\x00{st.st_size}\x00evolved-v2"
-    out = os.path.join(
-        _fixture_root(),
-        hashlib.sha1(key.encode()).hexdigest()[:16],
-        "documents_evolved",
-    )
-    if os.path.isdir(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = (
-        f"{out}.tmp.{os.getpid()}.{threading.get_ident()}"
-        f".{uuid.uuid4().hex[:8]}"
-    )
-    try:
-        os.makedirs(tmp, exist_ok=True)
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
         t = pq.read_table(src)
         ids = t["doc_id"].to_pandas()  # Int64-capable; NULLs -> NaN
         # NULL doc_ids go to the OLD-schema part (mod NULL = NULL is
@@ -363,14 +312,8 @@ def ensure_evolved_fixture(sf_dir: str) -> str:
         )
         new = new.append_column("quality_u", quality_u)
         pq.write_table(new, f"{tmp}/part-1.parquet")
-        os.rename(tmp, out)
-    except OSError:
-        if not os.path.isdir(out):
-            raise
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    return derived_fixture(src, "documents_evolved", write)
 
 
 _ORACLE_SCAN_SCHEMA_MERGE = """

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .jsonl import _fixture_root
+from ..session_cache import derived_fixture
 
 _N_PARTS = 4
 _ROWS_PER_BLOCK = 1000
@@ -287,34 +287,15 @@ def ensure_avro_fixture(sf_dir: str) -> str:
     """Write the Avro twin of ``{sf_dir}/documents.parquet`` as
     ``_N_PARTS`` container part files and return the directory.
     Derivation is 1:1 (same rows, round-robin sharded — the census is
-    order-insensitive); cache keyed by source content (mtime+size,
-    the ensure_partitioned_fixture lesson: regenerating the source in
-    place must mint a fresh layout); creation is atomic tmp+rename.
+    order-insensitive), once per source content
+    (``session_cache.derived_fixture``).
     """
-    import hashlib
-    import shutil
-    import threading
-    import uuid
-
     import pyarrow.parquet as pq
 
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    st = os.stat(src)
-    key = f"{src}\x00{st.st_mtime_ns}\x00{st.st_size}\x00avro"
-    out = os.path.join(
-        _fixture_root(),
-        hashlib.sha1(key.encode()).hexdigest()[:16],
-        "documents_avro",
-    )
-    if os.path.isdir(out):
-        return out
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = (
-        f"{out}.tmp.{os.getpid()}.{threading.get_ident()}"
-        f".{uuid.uuid4().hex[:8]}"
-    )
-    try:
-        os.makedirs(tmp, exist_ok=True)
+    src = f"{sf_dir}/documents.parquet"
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
         rows = pq.read_table(
             src, columns=["doc_id", "text", "lang", "source", "n_chars"]
         ).to_pylist()
@@ -323,14 +304,8 @@ def ensure_avro_fixture(sf_dir: str) -> str:
                 os.path.join(tmp, f"part-{part}.avro"),
                 rows[part::_N_PARTS],
             )
-        os.rename(tmp, out)
-    except OSError:
-        if not os.path.isdir(out):  # a real failure, not a lost race
-            raise
-    finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    return derived_fixture(src, "documents_avro", write)
 
 
 # --- the census key --------------------------------------------------

@@ -17,13 +17,11 @@ census is one map-side-combining aggregation, |langs|·|sources| rows.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .jsonl import _fixture_root
+from ..session_cache import derived_fixture
 
 
 def ensure_orc_fixture(sf_dir: str) -> str:
@@ -31,35 +29,16 @@ def ensure_orc_fixture(sf_dir: str) -> str:
     return its path. Derivation is 1:1 (same rows, same column
     order, no synthesized data); the writer is pyarrow's ORC
     implementation, deliberately NOT Spark's, so the read path is
-    exercised against a foreign writer. Atomic tmp + rename keyed by
-    pid/thread/uuid (the jsonl fixture lesson); regeneration is
-    byte-stable at the row level, so always re-writing is
-    self-healing.
+    exercised against a foreign writer. Written once per source
+    content (``session_cache.derived_fixture``).
     """
-    import hashlib
-    import threading
-    import uuid
-
     import pyarrow.orc as orc
     import pyarrow.parquet as pq
 
-    src = os.path.abspath(f"{sf_dir}/documents.parquet")
-    out_dir = os.path.join(
-        _fixture_root(), hashlib.sha1(src.encode()).hexdigest()[:16]
+    src = f"{sf_dir}/documents.parquet"
+    return derived_fixture(
+        src, "documents.orc", lambda tmp: orc.write_table(pq.read_table(src), tmp)
     )
-    os.makedirs(out_dir, exist_ok=True)
-    out = os.path.join(out_dir, "documents.orc")
-    tmp = (
-        f"{out}.tmp.{os.getpid()}.{threading.get_ident()}"
-        f".{uuid.uuid4().hex[:8]}"
-    )
-    try:
-        orc.write_table(pq.read_table(src), tmp)
-        os.replace(tmp, out)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return out
 
 
 _ORACLE_ORC_CENSUS = """

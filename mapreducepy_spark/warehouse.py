@@ -1,10 +1,17 @@
 """Persisted-table lifecycle over the warehouse directory.
 
 The generic machinery behind every "pay the shuffle ONCE, adopt
-forever" layout artifact: content-fingerprinted table names, `_SOURCE`
-sidecars naming the fixture bytes a table was derived from, GC of
-dead-fixture orphans with concurrency grace windows, and the
-adopt-or-rebuild dance over `_SUCCESS`-gated directories.
+forever" layout artifact. Its lifecycle: ``table_name`` mints the
+content-fingerprinted name (writer recipe plus the
+``session_cache.fingerprint`` of every source, file or part-file
+directory), so a changed recipe or changed source bytes always mint
+a new name;
+``ensure_table`` re-uses the registered table, adopts a
+`_SUCCESS`-gated orphan directory of that name via DDL, or rebuilds
+it, and writes a `_SOURCE` sidecar naming the writer version and the
+fixture paths it was derived from; ``gc_stale_tables`` collects
+dead-fixture and superseded-writer orphans with concurrency grace
+windows.
 
 Extracted from ``operators/joins._ensure_bucketed_tables`` (VERDICT
 r11 #4) so the bucketed fact tables AND the persisted LSH band index
@@ -17,6 +24,7 @@ directory in seconds of DDL.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import shutil
@@ -25,6 +33,8 @@ from collections.abc import Callable, Iterable
 from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
+
+from .session_cache import fingerprint
 
 # GC grace period: a directory younger than this is never collected,
 # even if its _SOURCE fixtures are gone — a CONCURRENT session sharing
@@ -52,6 +62,19 @@ def warehouse_path(spark: SparkSession) -> str:
         ).path
         or "spark-warehouse"
     )
+
+
+def table_name(prefix: str, recipe: Iterable[str], sources: Iterable[str]) -> str:
+    """Mint ``<prefix>_<12 hex>``: the sha1 of the writer ``recipe``
+    (version tag, bucket spec, sort keys, …) plus each source's path
+    and ``session_cache.fingerprint``. Adoption trusts the declared
+    layout purely from this name, so it must change whenever the
+    recipe or any source byte does — including an in-place rewrite
+    of one part-file of a directory table."""
+    parts = list(recipe) + [
+        f"{src}\x00{fingerprint(src)!r}" for src in sources
+    ]
+    return f"{prefix}_{hashlib.sha1('|'.join(parts).encode()).hexdigest()[:12]}"
 
 
 def touch(path: str) -> None:

@@ -278,31 +278,31 @@ def test_bucketed_warehouse_gc_removes_dead_fixture_tables(
             shutil.rmtree(d, ignore_errors=True)  # don't leak the props
 
 
-def test_bucketed_fingerprint_pins_writer_recipe(spark, sf_dir, monkeypatch):
+def test_bucketed_fingerprint_pins_writer_recipe(spark, sf_dir):
     """ADVICE r10: the adoption path trusts SORTED BY purely from the
     directory name, so the name must change when the writer recipe
     does — a bumped writer version must mint DIFFERENT table names
     (old dirs then age out instead of re-registering under a DDL
     their bytes no longer satisfy)."""
-    from mapreducepy_spark.operators import joins as j
-
-    names_v = j._ensure_bucketed_tables(spark, sf_dir)
-    monkeypatch.setattr(j, "_BUCKET_WRITER_V", j._BUCKET_WRITER_V + 1)
-    import hashlib
     import os
 
-    # recompute just the fingerprint arithmetic (no write): the names
-    # must differ purely from the version tag
-    fps = [
-        f"writer=v{j._BUCKET_WRITER_V}",
-        f"buckets={j._N_BUCKETS}",
-        "sort=o_orderkey,l_orderkey",
-        "schema=full",
-    ]
-    for t in ("orders", "lineitem"):
-        src = os.path.abspath(f"{sf_dir}/{t}.parquet")
-        st = os.stat(src)
-        fps.append(f"{src}\x00{st.st_mtime_ns}\x00{st.st_size}")
-    fp = hashlib.sha1("|".join(fps).encode()).hexdigest()[:12]
-    assert f"orders_bkt_{fp}" != names_v[0]
-    assert f"lineitem_bkt_{fp}" != names_v[1]
+    from mapreducepy_spark.operators import joins as j
+    from mapreducepy_spark.warehouse import table_name
+
+    def names(version: int) -> tuple[str, str]:
+        recipe = [
+            f"writer=v{version}",
+            f"buckets={j._N_BUCKETS}",
+            "sort=o_orderkey,l_orderkey",
+            "schema=full",
+        ]
+        srcs = [os.path.abspath(f"{sf_dir}/{t}.parquet") for t in ("orders", "lineitem")]
+        return table_name("orders_bkt", recipe, srcs), table_name("lineitem_bkt", recipe, srcs)
+
+    names_v = j._ensure_bucketed_tables(spark, sf_dir)
+    assert names(j._BUCKET_WRITER_V) == names_v
+    # recompute just the names (no write): they must differ purely
+    # from the version tag
+    bumped = names(j._BUCKET_WRITER_V + 1)
+    assert bumped[0] != names_v[0]
+    assert bumped[1] != names_v[1]

@@ -226,18 +226,12 @@ def test_dedup_family_never_goes_cartesian(spark, sf_dir, name):
 def test_sim_knn_chunk_merge_is_window_topk(spark, sf_dir):
     """The chunked brute-force kNN merges per-chunk partials with a
     row_number window — no join, no cartesian, no global sort of the
-    candidate set. Pinned via the PREDICATE path of the shared
-    kernel (same plan shape): the registered sim_knn key serves its
-    result from the content-keyed session cache, whose plan is a
-    checkpoint scan by construction."""
-    import pyspark.sql.functions as F
+    candidate set. Pinned on the un-cached build: the registered
+    sim_knn key serves its result from the content-keyed session
+    cache, whose plan is a checkpoint scan by construction."""
+    from mapreducepy_spark.llm.similarity import _build_exact_topk
 
-    from mapreducepy_spark.llm.similarity import _exact_topk
-    from mapreducepy_spark.plans import plan_text
-
-    plan = plan_text(
-        _exact_topk(spark, sf_dir, query_pred=F.lit(True)), "formatted"
-    )
+    plan = plan_text(_build_exact_topk(spark, sf_dir), "formatted")
     assert "CartesianProduct" not in plan
     assert "row_number" in plan
     assert "RunningWindowFunction" in plan or "Window" in plan
@@ -966,25 +960,6 @@ def test_multimodal_codec_keys_have_no_shuffle(spark, sf_dir):
     ):
         plan = plan_of(spark, key, sf_dir)
         assert "Exchange" not in plan, f"{key} shuffles payload-stage rows"
-
-
-def test_sampled_recall_ground_truth_is_query_sampled(spark, sf_dir):
-    """The sampled audit's cost lever must be IN the plan: the exact
-    ground-truth side filters vec_id % 5 = 0 BEFORE its GEMM kernel
-    (visible as a pushed/planned filter under the mapInPandas), not
-    as a post-hoc filter on full output."""
-    from pyspark.sql import functions as F
-
-    from mapreducepy_spark.llm import similarity
-
-    knn = similarity._exact_topk(
-        spark, sf_dir,
-        query_pred=F.col("vec_id") % similarity._RECALL_SAMPLE_EVERY == 0,
-    )
-    plan = plan_text(knn, "formatted")
-    # the modulo predicate must sit below the Arrow kernel: every
-    # mapInPandas leaf's input subtree carries the filter
-    assert "% 5) = 0" in plan or "% 5 = 0" in plan.replace("(", "").replace(")", "")
 
 
 def test_unpivot_is_single_scan_expand_no_shuffle(spark, sf_dir):

@@ -1,7 +1,8 @@
 """The content-keyed session cache is now load-bearing for ~15 keys
-(dedup funnel, tf-idf core, char bigrams, embed partials, exact kNN)
-— these tests pin its contract: same bytes hit, changed bytes miss,
-different artifacts never collide, and the FIFO bound holds.
+(dedup funnel, tf-idf core, char bigrams, embed partials, exact kNN,
+corpus broadcasts, IVF quantizer) — these tests pin its contract:
+same bytes hit, changed bytes miss, different artifacts never
+collide, and the FIFO bound holds.
 """
 
 from __future__ import annotations
@@ -88,6 +89,38 @@ def test_fifo_bound_evicts_oldest(spark, docs_dir):
     finally:
         session_cache._CACHE.clear()
         session_cache._CACHE.update(baseline)
+
+
+def test_none_scalar_is_served_from_cache(spark, docs_dir):
+    """``None`` is a cacheable verdict (the IVF quantizer of an empty
+    corpus), not a miss."""
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return None
+
+    for _ in range(2):
+        assert session_cache.scalar_cached(
+            spark, docs_dir, "documents", "none_verdict", compute
+        ) is None
+    assert len(calls) == 1
+
+
+def test_corpus_broadcasts_keyed_by_chunk_size(spark, sf_dir, monkeypatch):
+    """The corpus chunk broadcasts live in the one session memo, one
+    entry per chunk size: a smaller chunk size must never be served
+    the single-chunk entry."""
+    from mapreducepy_spark.llm import similarity
+
+    one = similarity._corpus_broadcasts_for(spark, sf_dir)
+    assert similarity._corpus_broadcasts_for(spark, sf_dir) is one
+    monkeypatch.setattr(similarity, "_CHUNK_ROWS", 7)
+    small = similarity._corpus_broadcasts_for(spark, sf_dir)
+    assert len(one) == 1 < len(small)
+    assert similarity._corpus_broadcasts_for(spark, sf_dir) is small
+    held = [v for v in session_cache._CACHE.values() if v is one or v is small]
+    assert len(held) == 2
 
 
 def test_cached_result_values_equal_fresh_build(spark, sf_dir):

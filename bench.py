@@ -1,31 +1,34 @@
-"""Per-round benchmark: run the engine's headline queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON line.
+"""Catalog benchmark: run every registered key over the fixture
+directory ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 fixtures) on
+``local[$SPARK_GRAFT_CPUS]`` and print JSON lines.
 
-Timing methodology: each query is fully executed through the ``noop``
-sink (materializes every row JVM-side, no driver collect, no disk) —
-measures plan execution, which is what scales. Each query runs
-``_RUNS`` times (3) and reports the min: the steady-state number
-(first runs absorb codegen/scan-cache/Python-worker warm-up
-unevenly, and this box shows heavy run-to-run contention noise —
-measured same-code totals swing 44–90 s — so the min over three is
-the honest steady-state read; the JSON records the run count). JVM
-+ Python-worker startup are warmed once up front and never billed.
+Usage:
+    python bench.py [key ...]        # default: every key, sorted
 
-Output (all JSON lines on stdout, in this order):
-1. the legacy one-line ``{"metric": ..., "queries": {...}}`` map
-   (the original driver contract — grows with the catalog);
-2. ``per_query_part`` lines, each a self-contained ≲1.8 KB slice of
-   the per-key map with steady (min), max and run-1 cold seconds —
-   VERDICT r13 #1: the legacy line outgrew the driver's bounded
-   line capture at 232 keys, so the map is re-emitted in chunks a
-   line-wise reader can always reconstruct;
-3. one ``artifact_fills`` line — VERDICT r13 #2 cold-run
-   accounting: total run-1 (cold) seconds next to the min-of-N
-   total, plus every session-cache artifact fill attributed to the
-   (key, run) that paid it;
-4. the short final summary line (headline total + cold total +
-   over-budget maps + loadavg) — printed LAST so it survives any
+Timing methodology: each run builds the key's DataFrame and writes it
+to the ``noop`` sink (every row materialized JVM-side, no driver
+collect, no disk), so it measures plan execution. Each key runs
+``_RUNS`` times through ``perfbench.harness.timed_call`` under the job
+group ``catalog/<key>/<run>``. Run 1 is the cold time (first-run
+codegen, scan caches and session-cache fills); the steady time is the
+median of runs 2.._RUNS, and the max of those runs is its spread. A key
+that raises or passes ``harness.OP_TIMEOUT_S`` is counted once as
+failed, its remaining runs are skipped and the sweep goes on. JVM and
+Python-worker start-up are warmed once up front and never billed.
+
+Output: one stderr line per key (cold, steady, max and the number of
+Spark jobs of its last run), then on stdout, in this order:
+1. the legacy one-line ``{"metric": ..., "queries": {...}}`` map of
+   steady seconds (the original driver contract; grows with the
+   catalog);
+2. ``per_query_part`` lines, each a self-contained slice under 2 KB
+   of the per-key map with steady, max and cold seconds, so a
+   line-wise reader with a bounded line capture can rebuild the map;
+3. one ``artifact_fills`` line: the cold and steady totals and every
+   session-cache artifact fill attributed to the (key, run) that paid
+   it;
+4. the short final summary line (steady and cold totals, keys
+   attempted and failed, loadavg), printed last so it survives any
    tail truncation regardless of catalog size.
 """
 
@@ -34,182 +37,70 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from dataclasses import dataclass, field
 
+from mapreducepy_spark import session_cache
 from mapreducepy_spark.registry import load_catalog
 from mapreducepy_spark.session import get_spark
+from perfbench import harness
 
 _RUNS = 3
+# failed keys named in the final line; the rest are on stderr
+_FAILED_KEYS_SHOWN = 10
 
-# Steady-state per-query budget (sec, sf0.1, local[32]). Purely a
-# regression tripwire: queries over this are named in the compact
-# summary line and on stderr so a slowdown is caught in-round, not
-# by the judge. Current slowest is ~1.6 s (dedup_survivors_verified).
-_BUDGET_SEC = 2.0
 
-# Queries allowed over budget for a DOCUMENTED structural reason —
-# they appear under "over_budget_known" (sec + ceiling + reason)
-# instead of tripping the "over_budget" regression list every round.
-# Each entry carries its OWN numeric ceiling (ADVICE r5): the
-# annotation explains why the steady-state floor sits above the
-# global tripwire, but a key exceeding its own ceiling still lands
-# in "over_budget" — a 3 s → 30 s regression can never hide behind
-# an old annotation.
-_FUNNEL_WHY = (
-    "LSH→exact-Jaccard→CC dedup funnel: bucketed candidate "
-    "generation + inverted-index intersection of every shared "
-    "shingle — intrinsic verified-pair workload, plan-asserted "
-    "non-cartesian (tests/test_plans.py dedup_family_never_goes_"
-    "cartesian). r8: the (doc_id, shingle) index is built ONCE per "
-    "(session, fixture content) and shared across all four funnel "
-    "keys (llm/dedup.py _shingle_index — VERDICT r7 work order #2); "
-    "min-of-5 floors r8: quiet 1.10-1.73 s, CONTENDED (pytest "
-    "saturating the box) 1.07-1.66 s. r14 (VERDICT r13 #5): the "
-    "verified-pair and true-Jaccard-pair tables are themselves "
-    "content-keyed session artifacts, so per-consumer steady floors "
-    "dropped to 0.03-0.4 s with the one-time fills itemized in the "
-    "artifact_fills line. Ceiling = 3 s."
-)
-_KNOWN_COSTS: dict[str, tuple[float, str]] = {
-    "scan_profile": (
-        4.0,
-        "oracle pins exact countDistinct x3 (the profiling card's "
-        "contract); since r13-opt the three exact distincts run as "
-        "concurrent per-column branches instead of the Expand "
-        "rewrite (1.87 -> 0.95 s quiet min-of-5); the "
-        "approx_count_distinct swap for 100TB scale is "
-        "wired+plan-tested behind the exact=False parameter "
-        "(operators/scans.py)",
-    ),
-    "dedup_survivors_verified": (3.0, _FUNNEL_WHY),
-    "join_exists_chain": (
-        3.0,
-        "TPC-H Q21 shape: correlated EXISTS + NOT EXISTS decorrelate "
-        "to semi/anti self-joins of lineitem — three passes over the "
-        "fact table are the query's intrinsic cost (all three "
-        "co-partition on l_orderkey, one probe shuffle, dim "
-        "broadcast; operators/subqueries.py). Quiet-box interleaved "
-        "min-of-5 floor r7: 1.84 s — ON the 2 s tripwire, so driver "
-        "contention (documented 1.2–2.5x band) crosses it without a "
-        "regression. Ceiling = 3 s.",
-    ),
-    "graph_pagerank": (
-        3.0,
-        "PageRank, 3 unrolled iterations over the localCheckpoint-ed "
-        "shipment edge list: each iteration broadcasts the "
-        "node-sized rank table onto edges plus one node-keyed "
-        "groupBy (operators/graph.py) — cost is iterations x "
-        "edge-linear by construction. Quiet "
-        "floors since r4: 1.3–1.7 s (today min-of-5: 1.71), "
-        "historical contended swings to 2.2–2.35 s with zero plan "
-        "change (BENCH_LOCAL round-8/10 attributions). Ceiling = 3 s.",
-    ),
-    "graph_knn_triangles": (
-        3.0,
-        "triangle census of the mutual-kNN graph: the dominant cost "
-        "is the exact top-K GEMM that builds the graph (the proven "
-        "sim_knn plan, localCheckpoint-ed once); the triangle joins "
-        "themselves are degree-bounded (≤K) and node-linear at every "
-        "scale — the documented intrinsic pair-space gauge "
-        "(stress10x: super-linear on pair space, far sub-quadratic). "
-        "r8 floors (shared corpus-broadcast cache): quiet 1.52 s / "
-        "contended 1.61 s — driver contention can cross the 2 s "
-        "tripwire without a regression. Ceiling = 3 s.",
-    ),
-    "dedup_ngram_jaccard": (3.0, _FUNNEL_WHY),
-    "dedup_threshold_sweep": (3.0, _FUNNEL_WHY),
-    "dedup_near_verified": (3.0, _FUNNEL_WHY),
-    "sim_ann_recall": (
-        3.0,
-        "the ANN-quality audit runs BOTH registered plans it "
-        "reconciles — the exact kNN GEMM ground truth AND the "
-        "bucketed ANN — by definition (llm/similarity.py); its cost "
-        "is intrinsically ~sum of the two. r8: the unit-normalized "
-        "corpus broadcasts are cached per (session, fixture content) "
-        "and shared with sim_knn/the sampled audit (VERDICT r7 work "
-        "order #2), dropping the min-of-5 floor to quiet 1.69 s / "
-        "CONTENDED 2.06 s (pytest saturating the box) from r7's "
-        "1.94 s quiet. The contended floor still crosses the 2 s "
-        "tripwire — intrinsic two-plan cost, within ceiling. At "
-        "deployment scale the audit samples the query side "
-        "(sim_ann_recall_sampled); this key keeps the exhaustive "
-        "contract so the oracle stays exact. Ceiling = 3 s.",
-    ),
-    "agg_approx_distinct_bound": (
-        3.0,
-        "the HLL accuracy audit runs the EXACT countDistinct next to "
-        "the sketch by definition (the oracle pins the exact count; "
-        "the flag certifies the sketch against it) — the "
-        "sim_ann_recall audit shape. Isolated min-of-5 floor r8: "
-        "1.61 s quiet AND 1.65 s under full-suite contention; inside "
-        "a full 203-key bench session the same plan reads 2.2-2.4 s "
-        "(accumulated JVM/GC state, not a plan change). A deployment "
-        "runs the sketch alone once audited. Ceiling = 3 s.",
-    ),
-    "pipeline_mixture_manifest": (
-        3.0,
-        "the composed clean->mixture->manifest flagship runs the "
-        "quality gate + decontamination + dedup window + mixture "
-        "planner as ONE fused plan by design (llm/pipeline.py) — its "
-        "cost is the sum of its stages. Isolated min-of-5 floor r9: "
-        "1.85 s quiet — ON the 2 s tripwire (the join_exists_chain "
-        "class), so the documented 1.2-2.5x contention band crosses "
-        "it without a regression (r9 quiet-bench read 3.12 s min / "
-        "5.56 s max while the same-evening isolated floor was "
-        "1.85 s). Ceiling = 3 s.",
-    ),
-    "join_skew_salted": (
-        3.0,
-        "the salted-join DEMO key: lineitem salted 8 ways against an "
-        "8x-exploded orders side, oracle-proven result-invariant — "
-        "the 8x replication IS the key's contract (the explicit "
-        "fallback for a hot key AQE's skew splitter can't fix), so "
-        "its floor is the replicated shuffle. r13-opt quiet min-of-3 "
-        "floors: 1.43-1.47 s across four same-day full benches — "
-        "under the 2 s tripwire, but the documented 1.2-2.5x "
-        "contention band crosses it (observed 2.10 min / 2.38 max in "
-        "one contended run, same code). Ceiling = 3 s.",
-    ),
-    "join_volume_shipping": (
-        3.0,
-        "TPC-H Q7 shape: lineitem joins orders AND customer (two "
-        "fact-side shuffles) with the nation dim broadcast twice "
-        "under aliases — the two-sided nation grid is the query's "
-        "intrinsic cost (operators/joins.py). Isolated min-of-5 "
-        "floor r9: 1.39 s quiet / 2.1 s max on a noisy box; the "
-        "documented contention band crosses the 2 s tripwire "
-        "without a plan change (r9 quiet-bench read 2.31 s min with "
-        "a TIGHT 2.50 s max — sustained neighbor load, not a "
-        "regression; plan re-audited unchanged). Ceiling = 3 s.",
-    ),
-    "agg_mad": (
-        3.0,
-        "median absolute deviation is TWO full type-7 median passes "
-        "by definition (the group median, then the median of "
-        "|x - median|) — each a window sort over the fact table, "
-        "both on the same group partitioning (operators/"
-        "aggregates.py). Isolated min-of-5 floor r9: 1.36 s quiet — "
-        "well under the 2 s tripwire, but the documented 1.2-2.5x "
-        "contention band crosses it without a regression (BENCH_r08-"
-        "style box noise; the r9 quiet-bench trip read 2.27 s min / "
-        "3.08 s max, while the same-session isolated floor was "
-        "1.36 s). At 100 TB the same statistic runs on "
-        "approx_percentile sketches. Ceiling = 3 s.",
-    ),
-    "sim_ann_recall_sampled": (
-        3.0,
-        "the deployment shape of sim_ann_recall: full ANN output "
-        "(the system under audit) + exact ground truth over a 1-in-5 "
-        "query sample. At sf0.1 the corpus fits ONE broadcast chunk, "
-        "so the floor is fixed-cost-bound (corpus fetch + both "
-        "component plans: quiet min-of-5 r7 2.015 s = sim_ann_lsh "
-        "1.05 + sampled exact GEMM 1.31), not FLOP-bound — the "
-        "sample's O(n_q*n*d) savings appear as the corpus grows "
-        "(stress10x: 7x wall on 10x data vs the exhaustive audit's "
-        "15x). r8 floors with the shared corpus-broadcast cache: "
-        "quiet 1.50 s / contended 1.94 s. Ceiling = 3 s.",
-    ),
-}
+@dataclass
+class Sweep:
+    """Per-key seconds of the keys that completed every run, the job
+    count of each key's last run, and the session-cache fills each
+    (key, run) paid for."""
+
+    cold: dict[str, float] = field(default_factory=dict)
+    steady: dict[str, float] = field(default_factory=dict)
+    qmax: dict[str, float] = field(default_factory=dict)
+    jobs: dict[str, int] = field(default_factory=dict)
+    fills: dict[str, list[dict]] = field(default_factory=dict)
+    fails: harness.Failures = field(default_factory=harness.Failures)
+
+
+def sweep(spark, sf_dir: str, catalog) -> Sweep:
+    """Time every key of ``catalog`` (name -> entry with a ``builder``),
+    in its order; a raising key is recorded in ``Sweep.fails`` under its
+    name and left out of every timing map."""
+
+    def run(spark, q):
+        q.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    out = Sweep()
+    tracker = spark.sparkContext.statusTracker()
+    for name, q in catalog.items():
+        out.fails.attempted += 1
+        runs: list[float] = []
+        fills: list[dict] = []
+        try:
+            for r in range(1, _RUNS + 1):
+                n_fills = len(session_cache.fill_log())
+                sec, _ = harness.timed_call(spark, f"catalog/{name}/{r}", run, spark, q)
+                runs.append(sec)
+                fills += [{**f, "run": r} for f in session_cache.fill_log()[n_fills:]]
+        except Exception as exc:  # noqa: BLE001 - a failing key is counted, not fatal
+            out.fails.record(name, exc)
+            print(f"bench: FAILED {out.fails.notes[-1]}", file=sys.stderr, flush=True)
+            continue
+        out.cold[name] = round(runs[0], 3)
+        out.steady[name] = round(harness.median(runs[1:]), 3)
+        out.qmax[name] = round(max(runs[1:]), 3)
+        out.jobs[name] = len(tracker.getJobIdsForGroup(f"catalog/{name}/{_RUNS}"))
+        if fills:
+            out.fills[name] = fills
+        print(
+            f"bench: {name} cold {out.cold[name]:.3f}s steady "
+            f"{out.steady[name]:.3f}s max {out.qmax[name]:.3f}s "
+            f"jobs {out.jobs[name]}",
+            file=sys.stderr,
+            flush=True,
+        )
+    return out
 
 
 def per_query_parts(
@@ -221,8 +112,8 @@ def per_query_parts(
 ) -> list[dict]:
     """Slice the per-key map into self-contained ``per_query_part``
     payloads whose serialized length stays well under the driver's
-    ~2 KB line-capture bound (VERDICT r13 #1). Merging the parts'
-    ``queries`` maps reconstructs the legacy line's map exactly."""
+    ~2 KB line-capture bound. Merging the parts' ``queries`` maps
+    reconstructs the legacy line's map exactly."""
     parts: list[tuple[dict, dict, dict]] = []
     cur_q: dict[str, float] = {}
     cur_x: dict[str, float] = {}
@@ -254,6 +145,31 @@ def per_query_parts(
     ]
 
 
+def summary_line(
+    s: Sweep, sf_val, n_parts: int, load_before, load_after
+) -> dict:
+    """The final stdout line. Its size is bounded whatever the catalog
+    size: it holds totals, counts and at most ``_FAILED_KEYS_SHOWN``
+    key names."""
+    return {
+        "metric": "total_runtime_all_queries",
+        "value": round(sum(s.steady.values()), 3),
+        "value_cold": round(sum(s.cold.values()), 3),
+        "unit": "sec",
+        "sf": sf_val,
+        "n_queries": len(s.steady),
+        "runs_per_query": _RUNS,
+        "per_query_parts": n_parts,
+        "attempted": s.fails.attempted,
+        "failed": s.fails.failed,
+        "failed_keys": [
+            note.split(":", 1)[0] for note in s.fails.notes[:_FAILED_KEYS_SHOWN]
+        ],
+        "loadavg_before": load_before,
+        "loadavg_after": load_after,
+    }
+
+
 def _loadavg() -> list[float] | None:
     try:
         with open("/proc/loadavg") as fh:
@@ -262,7 +178,7 @@ def _loadavg() -> list[float] | None:
         return None
 
 
-def main() -> None:
+def main() -> int:
     load_before = _loadavg()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -271,9 +187,15 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
+    catalog = load_catalog()
+    keys = sys.argv[1:] or sorted(catalog)
+    unknown = [k for k in keys if k not in catalog]
+    if unknown:
+        print(f"bench: unknown keys {unknown}", file=sys.stderr)
+        return 2
+
     spark = get_spark(app_name="mapreducepy-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    catalog = load_catalog()
 
     # warm-up: touch the biggest table so JVM/IO startup isn't billed,
     # and run one trivial Arrow batch so Python-worker startup isn't
@@ -283,122 +205,32 @@ def main() -> None:
     load(spark, sf_dir, "lineitem").count()
     spark.range(32).mapInPandas(lambda it: it, "id long").count()
 
-    from mapreducepy_spark import session_cache
-
-    timings: dict[str, float] = {}
-    spreads: dict[str, tuple[float, float]] = {}
-    colds: dict[str, float] = {}
-    # Artifact-fill attribution (VERDICT r13 work order #2): every
-    # session-cache build that runs during a key's timed runs is
-    # recorded against that key + run index, so a run-1 (cold) vs
-    # min-of-3 (steady) gap is itemized to a NAMED artifact in the
-    # output instead of silently vanishing behind the min().
-    fills_by_key: dict[str, list[dict]] = {}
-    for name in sorted(catalog):
-        q = catalog[name]
-        runs: list[float] = []
-        for r in range(_RUNS):
-            n_fills = len(session_cache.fill_log())
-            t0 = time.perf_counter()
-            df = q.builder(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            new = session_cache.fill_log()[n_fills:]
-            if new:
-                fills_by_key.setdefault(name, []).extend(
-                    {**f, "run": r + 1} for f in new
-                )
-        timings[name] = round(min(runs), 3)
-        spreads[name] = (round(min(runs), 3), round(max(runs), 3))
-        colds[name] = round(runs[0], 3)
-
-    total = round(sum(timings.values()), 3)
-    over = sorted(
-        (k for k, v in timings.items() if v > _BUDGET_SEC),
-        key=lambda k: -timings[k],
-    )
-    # an annotated key is excused only up to ITS OWN ceiling.
-    # Emitted as {key: sec} (VERDICT r7 item 3): the driver's tail
-    # capture preserves only the END of the per-query line, so the
-    # binding artifact must record a trip's MAGNITUDE inline, not
-    # just its existence.
-    # Trips carry the {min, max} across the _RUNS timed runs (VERDICT
-    # r8 work order #4): a 4.1 s min with a 4.2 s max is a real plan
-    # cost; 4.1 min / 9.0 max is box contention — without the spread
-    # that attribution needs a quiet-box re-run the binding artifact
-    # can't provide.
-    over_budget = {
-        k: {"sec": timings[k], "max": spreads[k][1]}
-        for k in over
-        if k not in _KNOWN_COSTS or timings[k] > _KNOWN_COSTS[k][0]
-    }
-    over_budget_known = {
-        k: {
-            "sec": timings[k],
-            "max": spreads[k][1],
-            "ceiling": _KNOWN_COSTS[k][0],
-            "why": _KNOWN_COSTS[k][1],
-        }
-        for k in over
-        if k in _KNOWN_COSTS and timings[k] <= _KNOWN_COSTS[k][0]
-    }
-    for k in over:
-        note = (
-            f" [known cost, ceiling {_KNOWN_COSTS[k][0]}s]"
-            if k in over_budget_known
-            else (
-                f" [EXCEEDS OWN CEILING {_KNOWN_COSTS[k][0]}s]"
-                if k in _KNOWN_COSTS
-                else ""
-            )
-        )
-        print(
-            f"bench: OVER BUDGET {k} = {timings[k]:.3f}s "
-            f"(budget {_BUDGET_SEC}s){note}",
-            file=sys.stderr,
-        )
+    s = sweep(spark, sf_dir, {k: catalog[k] for k in keys})
+    spreads = {k: (v, s.qmax[k]) for k, v in s.steady.items()}
+    parts = per_query_parts(s.steady, spreads, s.cold, sf_val)
+    summary = summary_line(s, sf_val, len(parts), load_before, _loadavg())
     print(
         json.dumps(
             {
                 "metric": "total_runtime_all_queries",
-                "value": total,
+                "value": summary["value"],
                 "unit": "sec",
-                "queries": timings,
+                "queries": s.steady,
                 "sf": sf_val,
                 "runs_per_query": _RUNS,
             }
         )
     )
-    # The per-query line above grows with the catalog (111 keys blew
-    # past the driver's bounded tail capture in round 3 —
-    # BENCH_r03.json "parsed": null because the head of the line,
-    # where the total lives, was truncated away; in round 13 the same
-    # truncation emptied PERF_r13's per_query/geomean/scaling maps).
-    # VERDICT r13 work order #1: re-emit the per-query map as
-    # MULTIPLE self-contained JSON lines bounded well under 2 KB
-    # each, so a line-wise reader can reconstruct the full map no
-    # matter how large the catalog grows. Each part carries per-key
-    # steady sec (min-of-_RUNS, identical to the legacy line), the
-    # max across runs (contention-attribution spread, VERDICT r8 #4)
-    # and the run-1 cold time (session-cache fill visibility,
-    # VERDICT r13 #2).
     sys.stdout.flush()
-    parts = per_query_parts(timings, spreads, colds, sf_val)
-    n_parts = len(parts)
     for payload in parts:
         print(json.dumps(payload))
-    # Cold-run accounting (VERDICT r13 work order #2): the sum of
-    # run-1 times next to the min-of-_RUNS total, plus every
-    # session-cache artifact fill attributed to the key + run that
-    # paid it — a cache fill is always visible in the artifact now.
-    total_cold = round(sum(colds.values()), 3)
-    # Bound this line too: a healthy session fills each artifact
-    # once (~a dozen entries); cap far above that so even an
+    # Bound this line too: a healthy session fills each artifact once
+    # (about a dozen entries); the cap sits far above that so even an
     # eviction storm cannot push the line past the capture bound.
-    n_fills = sum(len(v) for v in fills_by_key.values())
+    n_fills = sum(len(v) for v in s.fills.values())
     fills_capped: dict[str, list[dict]] = {}
     kept = 0
-    for k, v in fills_by_key.items():
+    for k, v in s.fills.items():
         if kept >= 24:
             break
         fills_capped[k] = v[: 24 - kept]
@@ -407,59 +239,15 @@ def main() -> None:
         json.dumps(
             {
                 "metric": "artifact_fills",
-                "total_cold": total_cold,
-                "total_steady": total,
+                "total_cold": summary["value_cold"],
+                "total_steady": summary["value"],
                 "fills_omitted": n_fills - kept,
                 "fills": fills_capped,
             }
         )
     )
-    # Box-load marker (VERDICT r10 #7): this machine swings 1.2-2.5x
-    # under contention, and per-round total spreads kept being
-    # attributed to load by narrative. Record 1/5/15-min loadavg at
-    # bench START and END so contention attribution is data in the
-    # ledger (before ≈ what the box was doing when timing began;
-    # after's 15-min figure also covers the run itself).
-    # Keep the FINAL line itself comfortably under the ~2 KB
-    # line-capture bound: the known-cost "why" annotations are long
-    # documentation strings, so they are truncated here (magnitudes —
-    # sec/max/ceiling — stay exact; the full text lives in
-    # bench.py::_KNOWN_COSTS), and at most the 5 largest trips are
-    # inlined (the rest are still named, with exact seconds, in the
-    # per_query_part lines above and on stderr).
-    known_trimmed = {
-        k: {
-            **over_budget_known[k],
-            "why": over_budget_known[k]["why"][:160]
-            + ("…" if len(over_budget_known[k]["why"]) > 160 else ""),
-        }
-        for k in sorted(over_budget_known, key=lambda k: -timings[k])[:5]
-    }
-    known_omitted = len(over_budget_known) - len(known_trimmed)
-    print(
-        json.dumps(
-            {
-                "metric": "total_runtime_all_queries",
-                "value": total,
-                "value_cold": total_cold,
-                "unit": "sec",
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "runs_per_query": _RUNS,
-                "per_query_parts": n_parts,
-                "over_budget": dict(
-                    sorted(
-                        over_budget.items(), key=lambda kv: -kv[1]["sec"]
-                    )[:10]
-                ),
-                "over_budget_omitted": max(0, len(over_budget) - 10),
-                "over_budget_known": known_trimmed,
-                "over_budget_known_omitted": known_omitted,
-                "loadavg_before": load_before,
-                "loadavg_after": _loadavg(),
-            }
-        )
-    )
+    print(json.dumps(summary))
+    return 0
 
 
 if __name__ == "__main__":

@@ -11,9 +11,11 @@ oracle and for scale:
 - **Arrow enabled**: every driver interchange (``toPandas``,
   ``pandas_udf``, ``mapInPandas``) moves columnar batches, not
   pickled rows.
-- **shuffle.partitions** defaults to the local core count; on a real
-  cluster this would be sized to ~128 MB per post-shuffle partition
-  (AQE coalescing makes the initial value a ceiling, not a target).
+- **shuffle.partitions** is the ``shuffle_partitions`` argument, else
+  ``$SPARK_GRAFT_SHUFFLE_PARTITIONS``, else 32, whatever the core
+  count; on a real cluster this would be sized to ~128 MB per
+  post-shuffle partition (AQE coalescing makes the initial value a
+  ceiling, not a target).
 - **Worker daemon** (``pyworker``): every Python task (MR jobs,
   pandas UDFs, ``applyInPandasWithState``) used to spend about 200 ms
   re-reading the directories of ``pyspark.zip``, the py4j zip and the

@@ -3,9 +3,9 @@
 The driver preserves only a bounded slice of bench stdout and parses
 it line-wise, so every line the driver must reconstruct has to stay
 under ~2 KB serialized. These tests pin that bound for the chunked
-``per_query_part`` emission and prove the chunks are lossless — a
-reader merging the parts recovers exactly the legacy line's per-key
-map plus the max/cold companions.
+``per_query_part`` emission and for the final summary line, and prove
+the chunks are lossless — a reader merging the parts recovers exactly
+the legacy line's per-key map plus the max/cold companions.
 
 No Spark session needed: the helpers are pure functions.
 """
@@ -64,39 +64,25 @@ def test_single_small_catalog_is_one_part():
     assert parts[0]["part"] == 1 and parts[0]["of"] == 1
 
 
-def test_known_cost_whys_leave_final_line_room():
-    # The final summary line must stay parseable even if every
-    # annotated key trips at once: with every why truncated to 160
-    # chars the serialized over_budget_known map plus the fixed
-    # fields has to fit the same ~2 KB capture bound.  This guards
-    # against someone growing _KNOWN_COSTS without noticing the
-    # line-size budget.
-    worst = {
-        k: {
-            "sec": 9.999,
-            "max": 99.999,
-            "ceiling": ceiling,
-            "why": why[:160] + ("…" if len(why) > 160 else ""),
-        }
-        for k, (ceiling, why) in list(bench._KNOWN_COSTS.items())[:6]
-    }
+def test_final_line_is_bounded_with_every_key_failed():
+    # The final summary line must stay under the same ~2 KB capture
+    # bound whatever the catalog does: at 500 keys, all failed, it
+    # still carries only totals, counts and a capped list of names.
+    timings, _, _ = _fake_catalog(500)
+    s = bench.Sweep()
+    for k in timings:
+        s.fails.attempted += 1
+        s.fails.record(k, RuntimeError("x" * 400))
     line = json.dumps(
-        {
-            "metric": "total_runtime_all_queries",
-            "value": 999.999,
-            "value_cold": 999.999,
-            "unit": "sec",
-            "sf": 0.1,
-            "n_queries": 500,
-            "runs_per_query": 3,
-            "per_query_parts": 40,
-            "over_budget": {},
-            "over_budget_known": worst,
-            "loadavg_before": [99.99, 99.99, 99.99],
-            "loadavg_after": [99.99, 99.99, 99.99],
-        }
+        bench.summary_line(
+            s, 0.1, 40, [99.99, 99.99, 99.99], [99.99, 99.99, 99.99]
+        )
     )
     assert len(line) < 2000, f"final line would be {len(line)} B"
+    out = json.loads(line)
+    assert (out["attempted"], out["failed"], out["n_queries"]) == (500, 500, 0)
+    assert 0 < len(out["failed_keys"]) < 500
+    assert set(out["failed_keys"]) <= set(timings)
 
 
 def test_fill_log_records_and_windows():

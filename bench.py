@@ -105,42 +105,51 @@ def sweep(spark, sf_dir: str, catalog) -> Sweep:
 
 def per_query_parts(
     timings: dict[str, float],
-    spreads: dict[str, tuple[float, float]],
+    qmax: dict[str, float],
     colds: dict[str, float],
     sf_val,
     max_len: int = 1600,
 ) -> list[dict]:
     """Slice the per-key map into self-contained ``per_query_part``
-    payloads whose serialized length stays well under the driver's
-    ~2 KB line-capture bound. Merging the parts' ``queries`` maps
-    reconstructs the legacy line's map exactly."""
+    payloads, each serializing to at most ``max_len`` bytes (under the
+    driver's ~2 KB line-capture bound) unless one key alone is longer.
+    Merging the parts' ``queries`` maps reconstructs the legacy line's
+    map exactly."""
+
+    def payload(part: int, of: int, q: dict, x: dict, c: dict) -> dict:
+        return {
+            "metric": "per_query_part",
+            "part": part,
+            "of": of,
+            "sf": sf_val,
+            "runs_per_query": _RUNS,
+            "queries": q,
+            "qmax": x,
+            "qcold": c,
+        }
+
+    # the empty payload with the widest part numbers any slicing can have
+    head = len(json.dumps(payload(len(timings), len(timings), {}, {}, {})))
     parts: list[tuple[dict, dict, dict]] = []
     cur_q: dict[str, float] = {}
     cur_x: dict[str, float] = {}
     cur_c: dict[str, float] = {}
-    cur_len = 0
+    cur_len = head
     for k in sorted(timings):
-        entry_len = 3 * (len(k) + 14)  # ~3 numeric entries per key
+        # '{"k": v}' is the entry plus 2 bytes, the length of the ', '
+        # that separates it from the previous entry of its map
+        entry_len = sum(len(json.dumps({k: m[k]})) for m in (timings, qmax, colds))
         if cur_q and cur_len + entry_len > max_len:
             parts.append((cur_q, cur_x, cur_c))
-            cur_q, cur_x, cur_c, cur_len = {}, {}, {}, 0
+            cur_q, cur_x, cur_c, cur_len = {}, {}, {}, head
         cur_q[k] = timings[k]
-        cur_x[k] = spreads[k][1]
+        cur_x[k] = qmax[k]
         cur_c[k] = colds[k]
         cur_len += entry_len
     if cur_q:
         parts.append((cur_q, cur_x, cur_c))
     return [
-        {
-            "metric": "per_query_part",
-            "part": i,
-            "of": len(parts),
-            "sf": sf_val,
-            "runs_per_query": _RUNS,
-            "queries": pq,
-            "qmax": px,
-            "qcold": pc,
-        }
+        payload(i, len(parts), pq, px, pc)
         for i, (pq, px, pc) in enumerate(parts, start=1)
     ]
 
@@ -206,8 +215,7 @@ def main() -> int:
     spark.range(32).mapInPandas(lambda it: it, "id long").count()
 
     s = sweep(spark, sf_dir, {k: catalog[k] for k in keys})
-    spreads = {k: (v, s.qmax[k]) for k, v in s.steady.items()}
-    parts = per_query_parts(s.steady, spreads, s.cold, sf_val)
+    parts = per_query_parts(s.steady, s.qmax, s.cold, sf_val)
     summary = summary_line(s, sf_val, len(parts), load_before, _loadavg())
     print(
         json.dumps(

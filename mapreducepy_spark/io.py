@@ -143,108 +143,21 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-# Below this input size the spread can never pay for itself for a
-# ~single-pass operator: the round-robin exchange + extra stage +
-# the plan→RDD partition probe cost a fixed ~0.5–0.7 s here, while
-# tokenizing this many SOURCE bytes single-core costs less (measured
-# round 5, sf0.1 documents = 594 KB single-row-group: spreading
-# DOUBLED text_tfidf, 1.59 s vs 0.83 s, and cost 1.3–1.6× across the
-# whole text family and embed_covariance; interleaved min-of-5).
-_SPREAD_MIN_BYTES = 32 << 20  # 32 MiB
+def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load a table with at least one partition per core.
 
-
-def load_spread(
-    spark: SparkSession, sf_dir: str, name: str, min_bytes: int = _SPREAD_MIN_BYTES
-) -> DataFrame:
-    """Load a table, guaranteeing at least one partition per core —
-    but only when the input is big enough for the spread to win.
-
-    CPU-heavy operators (shingling, hashing, explode) must never run
-    single-task just because the input arrived as one small file /
-    one parquet row-group. If the scan already splits wide — the
-    normal case at scale, where `maxPartitionBytes` gives thousands
-    of splits — this is a no-op; the round-robin repartition only
-    fires for narrow scans.
-
-    ``min_bytes`` gates the spread on the on-disk input size:
-
-    - default (``_SPREAD_MIN_BYTES``): a narrow scan SMALLER than
-      this skips the spread entirely (including the plan→RDD
-      partition probe) — for ~single-CPU-pass-per-byte operators
-      (tokenize, profile, fingerprint) the exchange costs more than
-      the single task it parallelizes at that size;
-    - ``min_bytes=0``: always spread a narrow scan — for operators
-      whose CPU cost per input byte is large and super-linear in the
-      fan-out (MinHash: 64 hashes × every shingle; shingle-pair
-      joins), where even a 600 KB input carries multi-second CPU
-      work (measured: the MinHash/LSH family runs 2–3× FASTER with
-      the spread at sf0.1).
-
-    When the size is unknowable even via the filesystem APIs, fall
-    through to the partition probe — those scans split wide on their
-    own and the probe returns the no-op path.
+    For operators whose CPU cost per input byte is large (MinHash: 64
+    hashes × every shingle; the shingle, n-gram and char-bigram
+    explodes): even a 600 KB single-row-group input carries seconds of
+    CPU work, and the spread runs the MinHash/LSH family 2–3× faster at
+    sf0.1. A scan that already splits wide, the normal case at scale,
+    is returned as is. Operators that make about one CPU pass per input
+    byte call ``load`` instead: at sf0.1 the exchange costs more than
+    the single task it would parallelize (1.3–1.6× slower across the
+    text family).
     """
     df = load(spark, sf_dir, name)
-    if min_bytes:
-        size = _input_size_bytes(spark, f"{sf_dir}/{name}.parquet")
-        if size is not None and size < min_bytes:
-            return df
     n_cores = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n_cores:
         df = df.repartition(n_cores)
     return df
-
-
-# non-local sizes memoized per path: getContentSummary walks the
-# dataset recursively, and load_spread may probe the same input 3×
-# per bench key — on a 100k-object store listing that walk would
-# cost more than the partition probe the gate exists to avoid. The
-# cache assumes a dataset path's size class (above/below the 32 MiB
-# gate) is stable within one process — true for fixtures and for
-# immutable lake layouts; a path rewritten mid-process at a
-# different size class would be mis-gated until restart.
-_SIZE_CACHE: dict[str, int | None] = {}
-
-
-def _input_size_bytes(spark: SparkSession, path: str) -> int | None:
-    """On-disk size of a dataset path, or None if unknowable.
-
-    Local single file → ``os.path`` (no JVM round-trip, the common
-    fixture layout; never cached — stat is cheap). Anything else —
-    local directory, remote URI, partitioned dataset — resolves
-    through the Hadoop FileSystem API (``getContentSummary`` is
-    recursive, memoized per path), so the ``load_spread`` size gate
-    short-circuits small DIRECTORY/remote inputs too instead of
-    silently falling through to the plan→RDD partition probe it was
-    measured to avoid (ADVICE r5, io.py:146)."""
-    try:
-        if os.path.isfile(path):
-            return os.path.getsize(path)
-    except OSError:
-        pass
-    if path in _SIZE_CACHE:
-        return _SIZE_CACHE[path]
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        size = (
-            int(fs.getContentSummary(hpath).getLength())
-            if fs.exists(hpath)
-            else None
-        )
-    except Exception:
-        # py4j errors for unreachable/unsupported schemes: size is
-        # simply unknowable — the caller falls back to the probe
-        size = None
-    if size is not None:
-        # never cache "missing/unknowable": the path may exist on the
-        # next call (e.g. a dataset materialized mid-process), and a
-        # stale None would skip the fast gate forever
-        _SIZE_CACHE[path] = size
-    return size
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture table (used by ``bench.py`` warm-up)."""
-    return {name: load(spark, sf_dir, name) for name in TABLES}

@@ -44,7 +44,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the corpus by doc_id. (md5 here for oracle parity; xxhash64 +
     a collision-check pass at production scale.)
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return docs.groupBy(F.md5("text").alias("text_hash")).agg(
         F.min("doc_id").alias("keeper_doc_id"),
         F.count(F.lit(1)).alias("n_copies"),
@@ -138,10 +138,10 @@ def _minhash_table(
     if shingles is not None:
         sh = shingles.select("doc_id", F.md5("shingle").alias("h"))
     else:
-        # min_bytes=0: MinHash/shingle fan-out is CPU-dense per input
-        # byte (8 hash rotations x every shingle / pair joins) — spread
-        # always (measured 2–3x faster even on a 594 KB input)
-        docs = load_spread(spark, sf_dir, "documents", min_bytes=0)
+        # spread: MinHash/shingle fan-out is CPU-dense per input byte
+        # (8 hash rotations x every shingle / pair joins), so one task
+        # per core wins 2–3x even on a 594 KB input
+        docs = load_spread(spark, sf_dir, "documents")
         # no .distinct() before the min-aggregation: min() is duplicate-
         # insensitive, so deduplicating (doc_id, h) first would only add
         # a full shuffle of the exploded shingle set for the same result
@@ -425,7 +425,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(docs), not O(pairs). Production: 64-bit signature via xxhash64
     + Hamming-distance banding (split into 4×16-bit sub-keys).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -491,10 +491,10 @@ def _shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     content) and reused by every exact-verification consumer."""
 
     def build() -> DataFrame:
-        # min_bytes=0: MinHash/shingle fan-out is CPU-dense per input
-        # byte (8 hash rotations x every shingle / pair joins) — spread
-        # always (measured 2–3x faster even on a 594 KB input)
-        docs = load_spread(spark, sf_dir, "documents", min_bytes=0)
+        # spread: MinHash/shingle fan-out is CPU-dense per input byte
+        # (8 hash rotations x every shingle / pair joins), so one task
+        # per core wins 2–3x even on a 594 KB input
+        docs = load_spread(spark, sf_dir, "documents")
         return docs.select(
             "doc_id", F.explode(F.expr(SPARK_SHINGLES)).alias("shingle")
         ).distinct()
@@ -767,7 +767,7 @@ def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     return (
         docs.withColumn("rn", F.row_number().over(w))
@@ -824,7 +824,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the corpus needs the hint removed (AQE then sizes the join)
     or the count guard used by dedup_survivors_verified.
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     h2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     tagged = docs.withColumn("is_eval", h2 < _EVAL_CUT).withColumn(
         "text_hash", F.md5("text")
@@ -1015,10 +1015,10 @@ def text_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``text_decontaminate``, with counts instead of existence.
     """
     def build() -> DataFrame:
-        # min_bytes=0: the shingle explode + distinct is CPU-dense
-        # per input byte — spreading wins 2x even on a 594 KB input
-        # (round-5 interleaved measurement)
-        docs = load_spread(spark, sf_dir, "documents", min_bytes=0)
+        # spread: the shingle explode + distinct is CPU-dense per
+        # input byte, so one task per core wins 2x even on a 594 KB
+        # input (round-5 interleaved measurement)
+        docs = load_spread(spark, sf_dir, "documents")
         h2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
         tagged = docs.withColumn("is_eval", h2 < _EVAL_CUT)
         return tagged.select(
@@ -1157,7 +1157,7 @@ def dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``read_jsonl`` line omitting the text field produces exactly
     this row shape).
     """
-    docs = load_spread(spark, sf_dir, "documents").filter(
+    docs = load(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
     pref = docs.select(
@@ -1275,7 +1275,7 @@ def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     production scale — the dedup_exact rule.)
     """
     d = (
-        load_spread(spark, sf_dir, "documents")
+        load(spark, sf_dir, "documents")
         .select(F.md5("text").alias("dig"), "source")
         .distinct()
     )
@@ -1296,11 +1296,6 @@ def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- verified-cluster survivors (the funnel endgame) ----------------
-
-# Above this many drop rows the broadcast hint comes off and the
-# anti-join falls back to Spark's own strategy choice (~16 bytes/row
-# -> ~80 MB at the threshold, well under the broadcast hard limit).
-_BROADCAST_DROPS_MAX = 5_000_000
 
 _ORACLE_DEDUP_SURVIVORS_VERIFIED = f"""
 WITH RECURSIVE {_duck_lsh_ctes()},
@@ -1366,9 +1361,10 @@ def dedup_survivors_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LSH candidate set (dedup_near_verified argument); the CC runs
     over verified EDGES (strictly fewer than candidates — hybrid
     driver/distributed, `_connected_components`); the final
-    materialization is a broadcast anti-join of the tiny drop list
-    against the corpus — 100 TB never shuffles to delete its
-    duplicates (the text_decontaminate shape).
+    materialization is an anti-join of the drop list against the
+    corpus, planned from the drop list's size: under the broadcast
+    threshold it is a broadcast and the corpus never shuffles to
+    delete its duplicates (the text_decontaminate shape).
     """
     verified = (
         dedup_near_verified(spark, sf_dir)
@@ -1376,17 +1372,14 @@ def dedup_survivors_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
     )
     cc = _connected_components(spark, verified)
+    # The planner sizes the drop list itself. The driver path's
+    # relation carries its exact size, so a small drop list is
+    # broadcast from the start. The distributed path's checkpoint
+    # carries only the estimate of the loop's joins, so the plan starts
+    # as a sort-merge join and AQE turns it into a broadcast from the
+    # runtime size, after the corpus side has been shuffled.
     drops = cc.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
-    # size-guard the broadcast hint (the _DRIVER_CC_MAX_EDGES rule):
-    # the drop list is O(duplicate docs), which is usually tiny but
-    # NOT bounded — a 30%-duplicate corpus would blow the driver's
-    # broadcast limit, so past the threshold let Spark pick the
-    # anti-join strategy instead of forcing it through the driver.
-    # cc is already materialized (localCheckpoint/driver table), so
-    # the count is a cheap metadata-ish scan, not a recompute.
-    if drops.count() <= _BROADCAST_DROPS_MAX:
-        drops = F.broadcast(drops)
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return docs.join(drops, "doc_id", "left_anti").select(
         "doc_id", "lang", "source"
     )

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, load_spread
+from ..io import load
 from ..registry import register
 from ..rounding import dround
 from ..session_cache import fixture_cached
@@ -78,7 +78,7 @@ def _partials_cached(
     tag = "cov_partials_vid" if require_vec_id else "cov_partials_all"
 
     def build() -> DataFrame:
-        raw = load_spread(spark, sf_dir, "embeddings")
+        raw = load(spark, sf_dir, "embeddings")
         cond = F.col("embedding").isNotNull() & (F.size("embedding") == _DIM)
         if require_vec_id:
             cond = F.col("vec_id").isNotNull() & cond
@@ -336,7 +336,7 @@ def embed_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .similarity import _valid_embeddings
 
-    valid = _valid_embeddings(load_spread(spark, sf_dir, "embeddings"))
+    valid = _valid_embeddings(load(spark, sf_dir, "embeddings"))
     mx = F.array_max(
         F.transform("embedding", lambda x: F.abs(x.cast("double")))
     )
@@ -638,7 +638,7 @@ def embed_mrl_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum_long = lambda arr: F.aggregate(  # noqa: E731 — exact int fold
         arr, F.lit(0).cast("long"), lambda acc, x: acc + x
     )
-    v = load_spread(spark, sf_dir, "embeddings").filter(
+    v = load(spark, sf_dir, "embeddings").filter(
         F.size("embedding") == _DIM
     )
     eng = F.transform(
@@ -775,7 +775,7 @@ def embed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-µ-unit diffs; argmin ties break to the smallest codeword
     id via the (err, cw) struct min on both engines.
     """
-    q = load_spread(spark, sf_dir, "embeddings").filter(
+    q = load(spark, sf_dir, "embeddings").filter(
         F.size("embedding") == _DIM
     ).select(
         "vec_id",
@@ -936,7 +936,7 @@ def embed_outlier_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    raw = load_spread(spark, sf_dir, "embeddings")
+    raw = load(spark, sf_dir, "embeddings")
     emb = raw.filter(
         F.col("embedding").isNotNull() & (F.size("embedding") == _DIM)
     )

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_spread
+from ..io import load
 from ..registry import register
 
 # Injection rule (both engines compute this identically): decimal
@@ -106,7 +106,7 @@ def text_pii_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL doc_id / NULL text rows are excluded by contract (they are
     quarantine rows; the injection rule needs a doc_id).
     """
-    docs = load_spread(spark, sf_dir, "documents").filter(
+    docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
     decorated = docs.select(
@@ -199,7 +199,7 @@ def text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL doc_id / NULL text rows are excluded by contract (same as
     the census: quarantine rows; the injection rule needs a doc_id).
     """
-    docs = load_spread(spark, sf_dir, "documents").filter(
+    docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
     decorated = docs.select(

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_spread
+from ..io import load
 from ..operators.sampling import split_case_sql, split_col
 from ..registry import register
 from ..rounding import dround
@@ -144,7 +144,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     quality = (
         docs.join(quality_kept_docs(docs), "doc_id")
         .withColumn(
@@ -282,7 +282,7 @@ def pipeline_drop_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     h2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     sig = (
         docs.select("doc_id", "source", "text")
@@ -445,7 +445,7 @@ def corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact-int-divided-once, dround 1e-6); a zero-token source
     yields NULL fraction on both engines (ANSI guard).
     """
-    planned = _mixture_planned(load_spread(spark, sf_dir, "documents"))
+    planned = _mixture_planned(load(spark, sf_dir, "documents"))
     return planned.select(
         "source",
         "n_tokens",
@@ -636,7 +636,7 @@ def corpus_mixture_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-int-divided-once under the dround formulation, NULL-guarded
     on zero-token sources.
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     frac = _mixture_fractions(_mixture_planned(docs))
     hashed = docs.select(
         "source",
@@ -747,7 +747,7 @@ def docs_corpus_card(
     zero-docs NULL guards; entropy follows the events_entropy ln
     discipline (dround 1e-6 absorbs libm ulp).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     base = docs.select(
         "lang",
         "source",
@@ -993,7 +993,7 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.prefix import with_global_prefix
 
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")

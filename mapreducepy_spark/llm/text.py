@@ -14,7 +14,7 @@ import heapq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_spread
+from ..io import load, load_spread
 from ..registry import register
 from ..rounding import dround, dround_sql
 from ..session_cache import fixture_cached
@@ -47,7 +47,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses each partition to its local vocabulary before the
     shuffle, so shuffle volume ≈ vocab × partitions, not tokens.
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -85,18 +85,16 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: df derives from the tf table (one row per (doc, word)),
     so the df aggregation's input is distinct pairs, not all tokens.
-    The corpus-sharing story is SIZE-DEPENDENT, by measurement:
-    above ``load_spread``'s gate the round-robin exchange is the
-    shared subtree both consumers reuse (ReusedExchange — one scan,
-    plan-pinned in tests/test_plans.py under a forced spread), which
-    is the plan you want at 100 TB; below the gate Catalyst prunes
-    tf's count out of the df subtree and re-tokenizes — and the
-    second pass over a sub-32-MiB input is measurably cheaper than
-    the exchange it would avoid (0.51 s vs 1.31 s at sf0.1). The
-    vocabulary-sized df table broadcasts to the tf side (no shuffle
-    of the big side); N is a scalar cross join (1 row).
+    Tokenizing is about one CPU pass per input byte, so the corpus
+    is a plain ``load``, not a spread: Catalyst prunes tf's count out
+    of the df subtree and re-tokenizes, and that second pass over the
+    input is measurably cheaper than a round-robin exchange both
+    consumers could reuse (0.51 s vs 1.31 s at sf0.1). At scale the
+    scan splits wide on its own. The vocabulary-sized df table
+    broadcasts to the tf side (no shuffle of the big side); N is a
+    scalar cross join (1 row).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -155,7 +153,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     document row (doc_id equi-join, co-partitioned with the
     aggregation output — AQE reuses the shuffle).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -243,7 +241,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing; production swaps the keyword score for a char-n-gram
     profile score over the same explode/groupBy skeleton.
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -290,7 +288,7 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure narrow map (regexp per row, codegen'd) — no shuffle.
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(F.expr(f"regexp_extract_all(text, '{_TOKEN_RE}', 0)"))
@@ -324,10 +322,10 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a cheap near-dup blocking key. Scale: explode + min-aggregate,
     shuffle O(docs).
     """
-    # min_bytes=0: the n-gram/rolling-hash explode is CPU-dense
-    # per input byte — spreading wins ~3x even on a 594 KB input
+    # spread: the n-gram/rolling-hash explode is CPU-dense per input
+    # byte, so one task per core wins ~3x even on a 594 KB input
     # (round-5 bench diff)
-    docs = load_spread(spark, sf_dir, "documents", min_bytes=0)
+    docs = load_spread(spark, sf_dir, "documents")
     sh = docs.select("doc_id", F.explode(F.expr(SPARK_SHINGLES)).alias("shingle"))
     return sh.groupBy("doc_id").agg(
         F.substring(F.min(F.md5("shingle")), 1, 16).alias("fingerprint")
@@ -371,7 +369,7 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-shard base computed from shard token totals (two-pass prefix
     sum — same one-window shape, run twice over metadata, not data).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     from pyspark.sql.window import Window
 
     n_tok = F.size(F.filter(F.split("text", " "), lambda x: x != "")).cast("bigint")
@@ -424,7 +422,7 @@ def text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     final top-k is Spark's TakeOrdered (per-partition heaps, never a
     global sort of the vocabulary).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda x: x != "")
     # transform over the all-but-last slice; lambda index i is 0-based,
     # array subscript is 0-based -> toks[i+1] is each token's successor
@@ -533,7 +531,7 @@ def text_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id. Threshold tuning is a driver-side constant change — the
     plan shape is invariant.
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     kept = quality_kept_docs(docs)
     return docs.join(kept, "doc_id").select(
         "doc_id",
@@ -594,10 +592,10 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographically smallest bigram among those at the max count,
     identical on both engines.
     """
-    # min_bytes=0: the n-gram/rolling-hash explode is CPU-dense
-    # per input byte — spreading wins ~3x even on a 594 KB input
+    # spread: the n-gram/rolling-hash explode is CPU-dense per input
+    # byte, so one task per core wins ~3x even on a 594 KB input
     # (round-5 bench diff)
-    docs = load_spread(spark, sf_dir, "documents", min_bytes=0)
+    docs = load_spread(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda x: x != "")
     d = docs.select("doc_id", toks.alias("t")).filter(F.size("t") >= 2)
     d = d.withColumn(
@@ -651,7 +649,7 @@ def _term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a per-call checkpoint would still re-tokenize per call."""
 
     def build() -> DataFrame:
-        docs = load_spread(spark, sf_dir, "documents")
+        docs = load(spark, sf_dir, "documents")
         return (
             docs.select(
                 "doc_id", F.explode(F.split("text", " ")).alias("word")
@@ -930,10 +928,10 @@ def text_charlm(spark: SparkSession, sf_dir: str) -> DataFrame:
     count DOWN — the guard is semantic, not cosmetic).
     """
     def build() -> DataFrame:
-        # min_bytes=0: the char-bigram explode fans every input byte
-        # into a row — CPU-dense enough that spreading wins 2x even
+        # spread: the char-bigram explode fans every input byte into
+        # a row — CPU-dense enough that one task per core wins 2x even
         # on a 594 KB input (round-5 interleaved measurement)
-        docs = load_spread(spark, sf_dir, "documents", min_bytes=0).filter(
+        docs = load_spread(spark, sf_dir, "documents").filter(
             F.length("text") >= 2
         )
         return (
@@ -1169,7 +1167,7 @@ def text_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    docs = load_spread(spark, sf_dir, "documents").select("source", "n_chars")
+    docs = load(spark, sf_dir, "documents").select("source", "n_chars")
     wp = Window.partitionBy("source")
     ranked = docs.select(
         "source",
@@ -1241,7 +1239,7 @@ def text_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash parity: all counts are exact integers; the rate is one
     exact-int division rounded at 1e-6 (events_session_stats rule).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     sw = (
         docs.select("source", F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
@@ -1305,7 +1303,7 @@ def docs_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     are each one exact-int division rounded once (dround), the
     events_session_stats rule.
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     per = docs.select(
         "source",
         "lang",
@@ -1399,7 +1397,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     wc = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
@@ -1501,7 +1499,7 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (NULL token arrays explode to nothing; ``len(t) > 0`` filters
     the empty split).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
         F.filter(F.split("text", " "), lambda x: x != "").alias("t"),
@@ -1605,7 +1603,7 @@ def text_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_ann_recall regret discipline — a raw double Σ over thousands
     of cells would be summation-order-dependent).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "source", F.explode(F.split("text", " ")).alias("w")
     ).filter(F.col("w") != "")
@@ -1839,7 +1837,7 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     tw = (
         docs.select("source", F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
@@ -2013,7 +2011,7 @@ def text_heavy_hitters_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     toks = (
         docs.select(
             "lang",

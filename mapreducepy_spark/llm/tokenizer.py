@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_spread
+from ..io import load
 from ..registry import register
 
 # Top-K adjacent pairs reported (the first K BPE merge candidates).
@@ -72,7 +72,7 @@ def text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     text tokenizes to no words on both (explode of NULL vs unnest of
     NULL).
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     wc = (
         docs.select(
             F.explode(

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, load_spread
+from ..io import load
 from ..registry import register
 from ..rounding import dround, dround_sql
 
@@ -307,7 +307,7 @@ def agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists for stop-word-like tokens are the skew risk — AQE skew
     handling plus (at real scale) a doc-frequency cap before collect.
     """
-    docs = load_spread(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
     ).filter(F.col("word") != "")
@@ -835,14 +835,38 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_AGG_PARETO = """
-WITH rev AS (
+# Per-supplier revenue sum(l_extendedprice * (1 - l_discount)) in
+# exact BIGINT cents. Each line is price cents × (100 − discount
+# percent), an integer in units of 1e-4, so the sum is the same in any
+# order and any partitioning; a double sum is not, and its round to
+# cents flips on the suppliers whose exact revenue ends in half a cent
+# (3 of 1000 at sf0.1 over 16 part-files). Both rounds are the
+# ``dround`` shape, exact here: price·100 and discount·100 sit within
+# 1e-6 of integers, and e4/100 is within an ulp of k/100.
+_DUCK_SUPPLIER_CENTS = """
     SELECT l_suppkey,
-           CAST(floor((SUM(l_extendedprice * (1 - l_discount))) * 100.0
-                      + 0.5) AS BIGINT) AS cents
+           CAST(floor(SUM(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)
+                          * (100 - CAST(floor(l_discount * 100.0 + 0.5) AS BIGINT)))
+                      / 100.0 + 0.5) AS BIGINT) AS cents
     FROM lineitem
     GROUP BY l_suppkey
-),
+"""
+
+
+def _supplier_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(l_suppkey, cents): the Spark side of ``_DUCK_SUPPLIER_CENTS``."""
+    li = load(spark, sf_dir, "lineitem")
+    price_cents = F.floor(F.col("l_extendedprice") * 100.0 + F.lit(0.5))
+    pct_kept = 100 - F.floor(F.col("l_discount") * 100.0 + F.lit(0.5))
+    return li.groupBy("l_suppkey").agg(
+        F.floor(F.sum(price_cents * pct_kept) / 100.0 + F.lit(0.5))
+        .cast("bigint")
+        .alias("cents")
+    )
+
+
+_ORACLE_AGG_PARETO = f"""
+WITH rev AS ({_DUCK_SUPPLIER_CENTS}),
 c AS (
     SELECT l_suppkey, cents,
            SUM(COALESCE(cents, 0)) OVER (
@@ -878,27 +902,21 @@ def agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard-local windows in parallel, broadcast offsets), so no task
     ever sees the whole supplier frame at any cardinality.
 
-    Hash parity: per-supplier revenue is rounded to exact BIGINT
-    CENTS first — integer addition is associative, so the two-level
-    regrouping of the prefix sum cannot change a single cumulative
-    value (a float running sum would be order- AND grouping-
-    sensitive; the cents switch is what makes the distributed shape
-    exact). The ordering ties on cents equal the old rounded-double
-    ordering, and every share is the same integer ratio on both
-    engines before the 1e-6 grid.
+    Hash parity: per-supplier revenue is summed in exact BIGINT
+    CENTS (``_supplier_cents``) — integer addition is associative, so
+    neither the scan's partitioning nor the two-level regrouping of
+    the prefix sum can change a single cumulative value (a float
+    running sum would be order- AND grouping-sensitive; the cents
+    switch is what makes the distributed shape exact). The ordering
+    ties on cents equal the old rounded-double ordering, and every
+    share is the same integer ratio on both engines before the 1e-6
+    grid.
     """
     from .prefix import with_global_prefix
 
-    li = load(spark, sf_dir, "lineitem")
-    rev = li.groupBy("l_suppkey").agg(
-        F.floor(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            * 100.0
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("cents")
-    ).withColumn("cents0", F.coalesce(F.col("cents"), F.lit(0)))
+    rev = _supplier_cents(spark, sf_dir).withColumn(
+        "cents0", F.coalesce(F.col("cents"), F.lit(0))
+    )
     c = with_global_prefix(
         rev,
         "cents",
@@ -927,10 +945,8 @@ def agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ORACLE_AGG_GINI = f"""
 WITH rev AS (
-    SELECT l_suppkey,
-           (floor((SUM(l_extendedprice * (1 - l_discount))) * 100.0 + 0.5) / 100.0)
-               AS revenue
-    FROM lineitem GROUP BY l_suppkey
+    SELECT l_suppkey, CAST(cents AS DOUBLE) / 100.0 AS revenue
+    FROM ({_DUCK_SUPPLIER_CENTS}) AS sc
 ),
 r AS (
     SELECT n.n_name, rev.l_suppkey, rev.revenue,
@@ -977,7 +993,7 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (#suppliers rows), so the ordered window is bounded by
     dimension cardinality, never data volume.
 
-    Hash parity: per-supplier revenue is rounded FIRST (the
+    Hash parity: per-supplier revenue is exact cents FIRST (the
     agg_pareto rule); rank·revenue products are exact doubles; the
     final expression keeps the identical operation shape on both
     engines and rounds to 1e-6. (n+1)/n is cast to double explicitly
@@ -986,10 +1002,8 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    li = load(spark, sf_dir, "lineitem")
-    rev = li.groupBy("l_suppkey").agg(
-        dround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-        .alias("revenue")
+    rev = _supplier_cents(spark, sf_dir).select(
+        "l_suppkey", (F.col("cents").cast("double") / 100.0).alias("revenue")
     )
     sup = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")

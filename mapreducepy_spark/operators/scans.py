@@ -288,7 +288,11 @@ def ensure_evolved_fixture(sf_dir: str) -> str:
 
     def write(tmp: str) -> None:
         os.makedirs(tmp)
-        t = pq.read_table(src)
+        # Without the source's schema metadata: a Spark-written source
+        # (a part-file layout) carries Spark's row schema there, and
+        # Spark would read part-1 by that 5-column schema and merge no
+        # quality_u.
+        t = pq.read_table(src).replace_schema_metadata()
         ids = t["doc_id"].to_pandas()  # Int64-capable; NULLs -> NaN
         # NULL doc_ids go to the OLD-schema part (mod NULL = NULL is
         # never 1) — quarantine rows never gain new columns.

@@ -11,11 +11,10 @@ oracle and for scale:
 - **Arrow enabled**: every driver interchange (``toPandas``,
   ``pandas_udf``, ``mapInPandas``) moves columnar batches, not
   pickled rows.
-- **shuffle.partitions** is the ``shuffle_partitions`` argument, else
-  ``$SPARK_GRAFT_SHUFFLE_PARTITIONS``, else 32, whatever the core
-  count; on a real cluster this would be sized to ~128 MB per
-  post-shuffle partition (AQE coalescing makes the initial value a
-  ceiling, not a target).
+- **shuffle.partitions** is the ``shuffle_partitions`` argument,
+  32 by default whatever the core count; on a real cluster this would
+  be sized to ~128 MB per post-shuffle partition (AQE coalescing makes
+  the initial value a ceiling, not a target).
 - **Worker daemon** (``pyworker``): every Python task (MR jobs,
   pandas UDFs, ``applyInPandasWithState``) used to spend about 200 ms
   re-reading the directories of ``pyspark.zip``, the py4j zip and the
@@ -43,7 +42,7 @@ _ENGINE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def get_spark(
     app_name: str = "mapreducepy-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -53,8 +52,6 @@ def get_spark(
     startup would dominate small-scale benchmarks (SURVEY.md §6).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -5,7 +5,8 @@ At sf0.1 every fixture table is ONE parquet file with ONE row group,
 so every scan is a single task and scan parallelism, the thing that
 matters at 100 TB, goes unmeasured. This script rewrites each table as
 ``n_files`` parquet part-files under ``dst_dir/<table>.parquet/`` (a
-directory source, which ``io.load`` and DuckDB's globbing both read).
+directory source: ``io.load`` reads it as is, DuckDB through its
+``*.parquet`` glob).
 
 With ``copies`` > 1 the fact and entity tables are replicated that many
 times, each copy with its ids shifted by a per-copy offset (see
@@ -27,9 +28,10 @@ by the catalog benchmark:
 
 Row order changes (round-robin repartition). Every declared query is
 row-order independent (deterministic aggregates/windows with total
-tie-breaks), so at COPIES=1 results are identical, and parity_sf.py
-can check them against the same directory, since DuckDB reads the
-part-file glob.
+tie-breaks), so at COPIES=1 results are identical, and
+``scripts/parity_sf.py DST_DIR`` checks them against the same
+directory: ``tests/parity_util.oracle_views`` points DuckDB at each
+table's part-file glob.
 """
 
 from __future__ import annotations

@@ -18,9 +18,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
-from mapreducepy_spark.io import TABLES
 from mapreducepy_spark.registry import load_catalog
 from mapreducepy_spark.session import get_spark
 
@@ -33,16 +30,13 @@ def main() -> int:
     cat = load_catalog()
     if not keys:
         keys = [k for k, q in cat.items() if q.oracle is not None]
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
     # the canonical comparator (column-set + dtype-kind + canonical
-    # values, with per-mismatch diagnostics) — never re-implemented
-    # here, so it cannot drift from the test suite's gate
-    from tests.parity_util import assert_frames_match
+    # values, with per-mismatch diagnostics) and the fixture views —
+    # never re-implemented here, so they cannot drift from the test
+    # suite's gate
+    from tests.parity_util import assert_frames_match, oracle_views
+
+    con = oracle_views(sf_dir)
 
     bad = 0
     checked = 0

@@ -26,12 +26,10 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 from pyspark.sql import SparkSession
 
-from mapreducepy_spark.io import TABLES
 from mapreducepy_spark.registry import load_catalog
-from tests.parity_util import assert_frames_match
+from tests.parity_util import assert_frames_match, oracle_views
 
 
 def main() -> int:
@@ -46,12 +44,7 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_views(sf_dir)
     catalog = load_catalog()
     names = [n for n in catalog if only is None or n in only]
     failures: dict[str, str] = {}

@@ -6,11 +6,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
-from mapreducepy_spark.io import TABLES
 from mapreducepy_spark.session import get_spark
+from tests.parity_util import oracle_views
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -50,11 +49,6 @@ def spark():
 
 @pytest.fixture(scope="session")
 def oracle():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle_views(SF_DIR)
     yield con
     con.close()

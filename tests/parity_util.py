@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import os
 from decimal import Decimal
 
 import numpy as np
@@ -91,3 +92,21 @@ def assert_frames_match(spark_pd: pd.DataFrame, duck_pd: pd.DataFrame, name: str
             f"{name}: {len(diffs)} of {len(s_rows)} sorted rows differ "
             f"(first 5 shown):\n{sample}"
         )
+
+
+def oracle_views(sf_dir: str):
+    """A new DuckDB connection with every fixture table registered as a
+    view of its name. A table is ``{sf_dir}/{t}.parquet``, one file or a
+    directory of part-files; DuckDB 1.0 finds no files in a directory
+    path, so a directory is read through its ``*.parquet`` glob."""
+    import duckdb
+
+    from mapreducepy_spark.io import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(path):
+            path = os.path.join(path, "*.parquet")
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con

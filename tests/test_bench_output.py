@@ -21,7 +21,7 @@ import bench
 
 def _fake_catalog(n: int, seed: int = 7):
     rng = random.Random(seed)
-    timings, spreads, colds = {}, {}, {}
+    timings, qmax, colds = {}, {}, {}
     for i in range(n):
         name = (
             "".join(rng.choices(string.ascii_lowercase + "_", k=rng.randint(8, 40)))
@@ -30,16 +30,16 @@ def _fake_catalog(n: int, seed: int = 7):
         lo = round(rng.uniform(0.05, 9.999), 3)
         hi = round(lo + rng.uniform(0, 12.0), 3)
         timings[name] = lo
-        spreads[name] = (lo, hi)
+        qmax[name] = hi
         colds[name] = hi
-    return timings, spreads, colds
+    return timings, qmax, colds
 
 
 def test_parts_are_bounded_and_lossless():
     # 500 keys with long names — well past the 232-key catalog that
     # overflowed the driver's capture in r13
-    timings, spreads, colds = _fake_catalog(500)
-    parts = bench.per_query_parts(timings, spreads, colds, sf_val=0.1)
+    timings, qmax, colds = _fake_catalog(500)
+    parts = bench.per_query_parts(timings, qmax, colds, sf_val=0.1)
     assert parts, "non-empty catalog must produce at least one part"
     merged_q, merged_x, merged_c = {}, {}, {}
     for i, p in enumerate(parts, start=1):
@@ -53,15 +53,31 @@ def test_parts_are_bounded_and_lossless():
         merged_x.update(p["qmax"])
         merged_c.update(p["qcold"])
     assert merged_q == timings
-    assert merged_x == {k: v[1] for k, v in spreads.items()}
+    assert merged_x == qmax
     assert merged_c == colds
 
 
 def test_single_small_catalog_is_one_part():
-    timings, spreads, colds = _fake_catalog(3)
-    parts = bench.per_query_parts(timings, spreads, colds, sf_val=0.01)
+    timings, qmax, colds = _fake_catalog(3)
+    parts = bench.per_query_parts(timings, qmax, colds, sf_val=0.01)
     assert len(parts) == 1
     assert parts[0]["part"] == 1 and parts[0]["of"] == 1
+
+
+def test_parts_keep_their_own_bound_with_slow_real_keys():
+    # The real catalog's names with every time at 1234.567 s: each
+    # line must stay within the max_len the slicing promises, not just
+    # under the capture bound on average-width numbers.
+    from mapreducepy_spark.registry import load_catalog
+
+    slow = {k: 1234.567 for k in load_catalog()}
+    parts = bench.per_query_parts(slow, slow, slow, sf_val=0.1, max_len=1600)
+    merged = {}
+    for p in parts:
+        line = json.dumps(p)
+        assert len(line) <= 1600, f"part {p['part']} serializes to {len(line)} B"
+        merged.update(p["queries"])
+    assert merged == slow
 
 
 def test_final_line_is_bounded_with_every_key_failed():

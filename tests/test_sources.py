@@ -194,31 +194,6 @@ def test_jsonl_corpus_quarantines_malformed_lines(spark, tmp_path):
     assert not parsed.is_cached and not parsed2.is_cached
 
 
-def test_input_size_bytes_resolves_files_dirs_and_missing(spark, tmp_path):
-    """ADVICE r5 (io.py:146): the load_spread size gate must resolve
-    sizes for DIRECTORY datasets too (Hadoop getContentSummary), not
-    just single local files — and report None, never raise, for a
-    missing path."""
-    from mapreducepy_spark.io import _input_size_bytes
-
-    f = tmp_path / "one.bin"
-    f.write_bytes(b"x" * 1234)
-    assert _input_size_bytes(spark, str(f)) == 1234  # os.path fast path
-
-    d = tmp_path / "dataset.parquet"
-    d.mkdir()
-    (d / "part-0").write_bytes(b"a" * 100)
-    sub = d / "nested"
-    sub.mkdir()
-    (sub / "part-1").write_bytes(b"b" * 50)
-    # directory: os.path.isfile is False -> Hadoop FS, recursive
-    assert _input_size_bytes(spark, str(d)) == 150
-
-    assert _input_size_bytes(spark, str(tmp_path / "nope")) is None
-    # explicit scheme works through the same Hadoop path
-    assert _input_size_bytes(spark, f"file://{f}") == 1234
-
-
 def test_jsonl_fixture_deterministic_and_quarantine_counts(spark, sf_dir):
     """The engine-written JSONL twin must be byte-identical across
     regenerations (the oracle predicts its parse from the parquet

@@ -262,19 +262,23 @@ def _connected_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     """Hybrid CC over a (doc_a, doc_b) edge list — driver union-find
     under ``_DRIVER_CC_MAX_EDGES``, distributed min-label propagation
     above; shared by ``dedup_clusters`` (LSH candidates) and
-    ``dedup_survivors_verified`` (exact-Jaccard-verified edges)."""
-    pairs = pairs.localCheckpoint()
-    if pairs.count() <= _DRIVER_CC_MAX_EDGES:
-        return _cc_driver(spark, pairs)
-    return _cc_distributed(spark, pairs)
+    ``dedup_survivors_verified`` (exact-Jaccard-verified edges).
+
+    One bounded collect decides the path and, under the limit, is
+    the union-find's input, so a small graph costs one Spark job."""
+    pdf = pairs.limit(_DRIVER_CC_MAX_EDGES + 1).toPandas()
+    if len(pdf) <= _DRIVER_CC_MAX_EDGES:
+        return _cc_driver(spark, pdf)
+    return _cc_distributed(spark, pairs.localCheckpoint())
 
 
-def _cc_driver(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    """Union-find with path compression + union-by-size; cluster_id =
-    min member, matching the propagation fixpoint exactly."""
+def _cc_driver(spark: SparkSession, pairs) -> DataFrame:
+    """Union-find with path compression + union-by-size over a
+    (doc_a, doc_b) edge list, pandas or Spark; cluster_id = min
+    member, matching the propagation fixpoint exactly."""
     import pandas as pd
 
-    pdf = pairs.toPandas()
+    pdf = pairs.toPandas() if isinstance(pairs, DataFrame) else pairs
     parent: dict[int, int] = {}
     size: dict[int, int] = {}
 

@@ -1925,31 +1925,6 @@ WHERE pe.rn = 1
 """
 
 
-def _adc_rollup_bounds(
-    spark: SparkSession, sf_dir: str, base: DataFrame
-) -> tuple | None:
-    """(id_min, id_max, max_abs_component) of the assigned corpus —
-    a 1-row aggregate over the checkpointed ``adc_base`` artifact,
-    memoized per (session, fixture content) and recorded in the fill
-    ledger. The bounds only GATE a plan choice (packed bigint argmin
-    vs struct argmin); both plans compute the identical declared
-    result. ``None`` for an empty corpus."""
-
-    def compute() -> tuple | None:
-        row = base.agg(
-            F.min("vec_id").alias("lo"),
-            F.max("vec_id").alias("hi"),
-            F.max(F.array_max(F.transform("qv", F.abs))).alias("amax"),
-        ).collect()[0]
-        if row["lo"] is None or row["amax"] is None:
-            return None
-        return (int(row["lo"]), int(row["hi"]), int(row["amax"]))
-
-    return session_cache.scalar_cached(
-        spark, sf_dir, "embeddings", "adc_bounds", compute
-    )
-
-
 @register(
     "sim_ann_adc_agreement", _ORACLE_SIM_ANN_ADC,
     tags=("llm", "similarity", "ann", "pq"),
@@ -2107,49 +2082,6 @@ def sim_ann_adc_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("qv").alias("q_qv"), "cell"
     )
     pairs = q_side.join(n_side, "cell").filter(F.col("q_id") != F.col("n_id"))
-    # Final rollup argmins, bigint-packed when PROVABLY exact
-    # (VERDICT r13 work order #3): min(struct(d, n_id)) plans a
-    # SortAggregate (struct agg buffers are not hash-mutable) — a
-    # full sort of the pair frame by (q_id, cell) at every scale.
-    # Unlike the cell/codeword argmins above, n_id is NOT bounded by
-    # a constant, so the bound is DERIVED per (session, fixture
-    # content) from the checkpointed base (`_adc_rollup_bounds`):
-    # with ids rebased to [0, B) and d ≤ 256·A² (64 squared diffs of
-    # µ-quantized components ≤ A in magnitude), enc = d·B + (n_id −
-    # id_min) is a strictly order-preserving injection of (d, n_id)
-    # into int64 whenever 256·A²·B + (B−1) < 2⁶³ — checked at plan
-    # time; fixtures outside the proven envelope (or an empty
-    # corpus) keep the struct formulation, same result either way.
-    bounds = _adc_rollup_bounds(spark, sf_dir, base)
-    if bounds is not None:
-        id_min, id_max, amax = bounds
-        nb = id_max - id_min + 1
-        d_bound = 256 * amax * amax
-        if d_bound <= (2**63 - 1 - (nb - 1)) // nb:
-            ncode = F.col("n_id") - F.lit(id_min).cast("long")
-            nbl = F.lit(nb).cast("long")
-            return (
-                pairs.groupBy("q_id", "cell")
-                .agg(
-                    F.min(l2("q_qv", "n_qv") * nbl + ncode).alias("ee"),
-                    F.min(l2("q_qv", "recon") * nbl + ncode).alias("ea"),
-                )
-                .select(
-                    F.col("q_id").cast("bigint").alias("query_id"),
-                    F.col("cell").cast("bigint").alias("cell"),
-                    (F.col("ee") % nbl + F.lit(id_min))
-                    .cast("bigint")
-                    .alias("nn_exact"),
-                    (F.col("ea") % nbl + F.lit(id_min))
-                    .cast("bigint")
-                    .alias("nn_adc"),
-                    F.expr(f"ee DIV {nb}").cast("bigint").alias("d_exact_u2"),
-                    F.expr(f"ea DIV {nb}").cast("bigint").alias("d_adc_u2"),
-                    (F.col("ee") % nbl == F.col("ea") % nbl)
-                    .cast("int")
-                    .alias("agree"),
-                )
-            )
     return (
         pairs.groupBy("q_id", "cell")
         .agg(

@@ -356,80 +356,6 @@ GROUP BY event_type
 """
 
 
-def _events_argminmax_bounds(
-    spark: SparkSession, sf_dir: str
-) -> dict | None:
-    """Packing bounds + invariant flags for the events argmin/argmax
-    family (``agg_minmax_by``, ``events_ohlc``) — one narrow-column
-    aggregate over the events table, memoized per (session, fixture
-    content) and recorded in the artifact-fill ledger. The bounds
-    only GATE a plan choice (bigint-packed argmin vs struct argmin;
-    both compute the identical declared result), so a
-    stale-impossible content key is all the correctness they need.
-    ``None`` when no row has a timestamp (the packed encoding would
-    never be evaluated).
-
-    Fields: ``t_lo/t_hi`` (unix µs over non-NULL ts), ``id_lo/id_hi``
-    (event_id range), ``ts_unique`` (every non-NULL ts distinct —
-    when true, lexicographic struct order is decided by ts alone),
-    ``v_ok`` (every non-NULL value is magnitude-bounded AND exactly
-    round-trips through integer cents, per row), ``c_lo/c_hi``
-    (cents range, derived from the monotone cents transform of the
-    value min/max)."""
-    import math
-
-    from ..session_cache import scalar_cached
-
-    def compute() -> dict | None:
-        e = load(spark, sf_dir, "events")
-        cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-        bad_v = (
-            F.when(F.col("value").isNull(), 0)
-            .when(F.abs(F.col("value")) >= F.lit(4.0e13), 1)
-            .when(
-                F.col("value")
-                != cents.cast("double") / F.lit(100.0),
-                1,
-            )
-            .otherwise(0)
-        )
-        row = e.agg(
-            F.min(F.unix_micros("ts")).alias("t_lo"),
-            F.max(F.unix_micros("ts")).alias("t_hi"),
-            F.count("ts").alias("n_ts"),
-            F.countDistinct("ts").alias("n_ts_d"),
-            F.min("event_id").alias("id_lo"),
-            F.max("event_id").alias("id_hi"),
-            F.max(bad_v).alias("bad_v"),
-            F.min("value").alias("v_lo"),
-            F.max("value").alias("v_hi"),
-        ).collect()[0]
-        if row["t_lo"] is None:
-            return None
-        id_lo = 0 if row["id_lo"] is None else int(row["id_lo"])
-        id_hi = id_lo - 1 if row["id_hi"] is None else int(row["id_hi"])
-        v_ok = (row["bad_v"] or 0) == 0
-        if v_ok and row["v_lo"] is not None:
-            c_lo = int(math.floor(row["v_lo"] * 100.0 + 0.5))
-            c_hi = int(math.floor(row["v_hi"] * 100.0 + 0.5))
-        else:
-            c_lo, c_hi = 0, -1
-        return {
-            "t_lo": int(row["t_lo"]),
-            "t_hi": int(row["t_hi"]),
-            "id_lo": id_lo,
-            "id_hi": id_hi,
-            "ts_unique": int(row["n_ts"]) == int(row["n_ts_d"]),
-            "v_ok": v_ok,
-            "c_lo": c_lo,
-            "c_hi": c_hi,
-        }
-
-    return scalar_cached(
-        spark, sf_dir, "events", "events_argminmax_bounds", compute
-    )
-
-
 @register("agg_minmax_by", _ORACLE_AGG_MINMAX_BY, tags=("agg", "argmax"))
 def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Argmin/argmax aggregates: the id of each type's earliest and
@@ -450,62 +376,8 @@ def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first/last pick (both engines' MIN/MAX skip NULLs, so the
     exclusion is symmetric by construction; a tsn flag would
     instead crown a time-less event "last", which is nonsense).
-
-    Plan shape (VERDICT r13 work order #3): a struct-valued MIN/MAX
-    buffer is not hash-mutable, so the struct formulation plans a
-    SortAggregate — a full map-side sort of the fact table by group
-    key at every scale. When the fixture's runtime-derived bounds
-    prove the encoding exact (``_events_argminmax_bounds``:
-    (t_hi−t_lo)·B + (B−1) < 2⁶³ for B = id range + 2), the same
-    lexicographic order is packed into ONE bigint —
-    code = Δts_us·B + idcode, idcode = id − id_lo (or B−1 for a
-    NULL id, matching the idn flag's ordering) — which is a strictly
-    order-preserving injection, so MIN/MAX over the code picks the
-    identical row and decodes to the identical id, and the aggregate
-    hash-combines. Fixtures outside the envelope (or with no
-    timestamps at all) keep the struct plan; results are identical
-    either way (pinned by the adversarial edge/NULL-sweep fixtures,
-    which exercise both plans).
     """
     e = load(spark, sf_dir, "events")
-    b = _events_argminmax_bounds(spark, sf_dir)
-    if b is not None:
-        t_lo, t_hi = b["t_lo"], b["t_hi"]
-        id_lo, id_hi = b["id_lo"], b["id_hi"]
-        nb = id_hi - id_lo + 2
-        if (t_hi - t_lo) <= (2**63 - 1 - (nb - 1)) // nb:
-            nbl = F.lit(nb).cast("long")
-            idcode = F.when(
-                F.col("event_id").isNull(), F.lit(nb - 1).cast("long")
-            ).otherwise(F.col("event_id") - F.lit(id_lo).cast("long"))
-            code = F.when(
-                F.col("ts").isNotNull(),
-                (F.unix_micros("ts") - F.lit(t_lo).cast("long")) * nbl
-                + idcode,
-            )
-
-            def _decode(enc: Column) -> Column:
-                idc = enc % nbl
-                return (
-                    F.when(idc == F.lit(nb - 1), F.lit(None))
-                    .otherwise(idc + F.lit(id_lo))
-                    .cast("bigint")
-                )
-
-            return (
-                e.groupBy("event_type")
-                .agg(
-                    F.min(code).alias("__first_code"),
-                    F.max(code).alias("__last_code"),
-                    F.count(F.lit(1)).alias("n_events"),
-                )
-                .select(
-                    "event_type",
-                    _decode(F.col("__first_code")).alias("first_event_id"),
-                    _decode(F.col("__last_code")).alias("last_event_id"),
-                    "n_events",
-                )
-            )
     pair = F.when(
         F.col("ts").isNotNull(),
         F.struct(

@@ -1258,67 +1258,28 @@ GROUP BY 1, 2
 """
 
 
-def ohlc_aggregate(events: DataFrame, pack: tuple | None = None) -> DataFrame:
+def ohlc_aggregate(events: DataFrame) -> DataFrame:
     """The ONE OHLC aggregation expression tree, shared by the batch
     ``events_ohlc`` operator and the streaming ``ohlc_bars`` twin —
     a drifted copy would silently miss the next tie-break or
     rounding fix (the ``_candidate_jaccard`` rule). Caller provides
     an events-shaped frame (batch or watermarked stream).
-
-    ``pack`` (batch-only, VERDICT r13 #3): a pre-PROVEN
-    ``(t_lo_us, c_lo, n_cents)`` bound triple from
-    ``aggregates._events_argminmax_bounds``. When present, open/close
-    ride a bigint-packed argmin/argmax —
-    ``code = Δts_us·B + centscode`` — instead of the 5-field struct
-    min/max whose buffer forces a SortAggregate (a full map-side
-    sort of the fact table). The caller may pass it ONLY when the
-    bounds job proved (a) all non-NULL ts are distinct, so the
-    lexicographic (ts, idn, id, vn, v) order is decided by ts alone
-    and the cents payload just rides along; (b) every non-NULL value
-    round-trips exactly through integer cents (so the decode
-    reproduces the identical double); (c) the product fits int64.
-    The streaming twin never passes it (an unbounded stream has no
-    bounds job), keeping its always-correct struct plan; the
-    stream-equals-batch test then exercises pack vs struct equality
-    end-to-end. High/low/count/sum are identical in both variants.
     """
     val_cents = F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("bigint")
-    if pack is not None:
-        t_lo, c_lo, n_cents = pack
-        bvl = F.lit(n_cents).cast("long")
-        centscode = F.when(
-            F.col("value").isNull(), F.lit(n_cents - 1).cast("long")
-        ).otherwise(val_cents - F.lit(c_lo).cast("long"))
-        code = (
-            F.unix_micros("ts") - F.lit(t_lo).cast("long")
-        ) * bvl + centscode
-
-        def _decode(enc):
-            vc = enc % bvl
-            return (
-                F.when(vc == F.lit(n_cents - 1), F.lit(None).cast("double"))
-                .otherwise((vc + F.lit(c_lo)).cast("double") / F.lit(100.0))
-            )
-
-        open_agg = _decode(F.min(code)).alias("open_value")
-        close_agg = _decode(F.max(code)).alias("close_value")
-    else:
-        pair = F.struct(
-            F.col("ts"),
-            F.col("event_id").isNull().cast("int").alias("idn"),
-            F.col("event_id").alias("id"),
-            F.col("value").isNull().cast("int").alias("vn"),
-            F.col("value").alias("v"),
-        )
-        open_agg = F.min(pair).getField("v").alias("open_value")
-        close_agg = F.max(pair).getField("v").alias("close_value")
+    pair = F.struct(
+        F.col("ts"),
+        F.col("event_id").isNull().cast("int").alias("idn"),
+        F.col("event_id").alias("id"),
+        F.col("value").isNull().cast("int").alias("vn"),
+        F.col("value").alias("v"),
+    )
     return (
         events.filter(F.col("ts").isNotNull())
         .groupBy(F.window("ts", "30 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            open_agg,
-            close_agg,
+            F.min(pair).getField("v").alias("open_value"),
+            F.max(pair).getField("v").alias("close_value"),
             F.max("value").alias("high_value"),
             F.min("value").alias("low_value"),
             (F.sum(val_cents).cast("double") / 100.0).alias("sum_value"),
@@ -1368,28 +1329,8 @@ def events_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-timestamp rows are excluded symmetrically (Spark's
     ``window()`` drops them silently; the oracle must not group
     them under a NULL bar).
-
-    Plan shape (VERDICT r13 #3): when the session's events-bounds
-    job PROVES the packing invariants — all non-NULL ts distinct
-    (the lexicographic order is then decided by ts alone), every
-    value exactly cent-round-trippable, product inside int64 — the
-    open/close argmin/argmax run bigint-packed through the ordinary
-    HashAggregate instead of the struct-buffer SortAggregate (which
-    sorts the fact table map-side at every scale). Fixtures outside
-    the proven envelope (ts ties, non-cent values, huge spans) keep
-    the struct plan; results are identical either way, and the
-    streaming twin always uses the struct form (see
-    ``ohlc_aggregate``).
     """
-    from .aggregates import _events_argminmax_bounds
-
-    pack = None
-    b = _events_argminmax_bounds(spark, sf_dir)
-    if b is not None and b["ts_unique"] and b["v_ok"]:
-        n_cents = b["c_hi"] - b["c_lo"] + 2
-        if (b["t_hi"] - b["t_lo"]) <= (2**63 - 1 - (n_cents - 1)) // n_cents:
-            pack = (b["t_lo"], b["c_lo"], n_cents)
-    return ohlc_aggregate(load(spark, sf_dir, "events"), pack=pack)
+    return ohlc_aggregate(load(spark, sf_dir, "events"))
 
 
 # --- interval concurrency (sweep-line peak occupancy) ---------------

@@ -14,8 +14,8 @@ once, not per query.
   only place the engine reads ``(mtime_ns, size)``; the warehouse's
   table names (``warehouse.table_name``) hash it too.
 - ``fixture_cached`` (a ``localCheckpoint``-ed DataFrame) and
-  ``scalar_cached`` (any driver-side value: packing bounds, broadcast
-  handles, ``None`` verdicts) share ONE bounded FIFO, ``_CACHE``,
+  ``scalar_cached`` (any driver-side value: broadcast handles,
+  ``None`` verdicts) share ONE bounded FIFO, ``_CACHE``,
   keyed by (applicationId, tag, source path, fingerprint). A new
   Spark session, a different fixture path or rewritten fixture bytes
   all mint fresh entries, so a cached value can never serve stale
@@ -26,8 +26,8 @@ once, not per query.
   drops. Every miss is recorded in the fill ledger.
 - ``derived_fixture`` writes an on-disk file or directory derived
   from a source table (the JSONL/CSV/ORC/Avro twins, the hive and
-  schema-evolution layouts) once per source content, under a
-  writable fixture root, atomically.
+  schema-evolution layouts) once per source content and writer
+  module source, under a writable fixture root, atomically.
 """
 
 from __future__ import annotations
@@ -43,10 +43,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# One full-catalog session at one fixture directory holds 20 distinct
-# entries (16 checkpointed tables, 2 bound tuples, the corpus
-# broadcasts, the IVF quantizer); the bound leaves headroom so running
-# the catalog evicts nothing.
+# One full-catalog session at one fixture directory holds 18 distinct
+# entries (16 checkpointed tables, the corpus broadcasts, the IVF
+# quantizer); the bound leaves headroom so running the catalog evicts
+# nothing.
 _CACHE: dict[tuple, object] = {}
 _CACHE_MAX = 32
 
@@ -133,9 +133,8 @@ def scalar_cached(
 ):
     """Run ``compute`` once per (session, ``{sf_dir}/{table}.parquet``
     content, ``tag``) and serve the returned object to every later
-    caller. For driver-side values: packing bounds and invariant
-    flags that gate provably-exact plan rewrites, broadcast handles
-    (the corpus chunks, the IVF quantizer)."""
+    caller. For driver-side values, such as broadcast handles (the
+    corpus chunks, the IVF quantizer)."""
     return _cached(spark, sf_dir, table, tag, compute)
 
 
@@ -187,16 +186,22 @@ def _fixture_root() -> str:
 def derived_fixture(src: str, name: str, write: Callable[[str], None]) -> str:
     """Return the path of the fixture ``name`` derived from ``src``,
     calling ``write(tmp_path)`` to create it (a file or a directory)
-    only when no copy for ``src``'s current content exists yet.
+    only when no copy for ``src``'s current content and this writer
+    exists yet.
 
-    The path is ``<fixture root>/<sha1(src, fingerprint(src),
-    name)>/<name>``, so rewriting the source in place mints a fresh
-    fixture. Creation is atomic: ``write`` fills a tmp path unique to
-    this process and thread (a pid-only suffix collides across
-    threads, ADVICE r6) which is then renamed into place; the loser of
-    a concurrent race, or a failed write, removes its tmp."""
+    The path is ``<fixture root>/<sha1(src, fingerprint(src), name,
+    writer)>/<name>``, where ``writer`` is the sha1 of the source file
+    that defines ``write``: rewriting the source in place, or editing
+    the writer or a constant in its module, mints a fresh fixture
+    instead of serving one written by the old code. Creation is
+    atomic: ``write`` fills a tmp path unique to this process and
+    thread (a pid-only suffix collides across threads, ADVICE r6)
+    which is then renamed into place; the loser of a concurrent race,
+    or a failed write, removes its tmp."""
     src = os.path.abspath(src)
-    key = f"{src}\x00{fingerprint(src)!r}\x00{name}"
+    with open(write.__code__.co_filename, "rb") as fh:
+        writer = hashlib.sha1(fh.read()).hexdigest()
+    key = f"{src}\x00{fingerprint(src)!r}\x00{name}\x00{writer}"
     out = os.path.join(
         _fixture_root(), hashlib.sha1(key.encode()).hexdigest()[:16], name
     )

@@ -3,9 +3,10 @@
 Times the streaming surface end-to-end with an AvailableNow trigger:
 each op drains the staged fixture through its real streaming plan
 (file micro-batch source → stateful op → sink) and reports wall-clock
-from ``start()`` to termination plus the micro-batch count. The sink
-is ``noop`` (same discipline as bench.py) except the band-index
-appender, whose ``foreachBatch`` INSERT is the thing being measured.
+from ``start()`` to termination plus the micro-batch count, both
+per run. The sink is ``noop`` (same discipline as bench.py) except
+the band-index appender, whose ``foreachBatch`` INSERT is the thing
+being measured.
 
 This is a latency gauge for the operators' micro-batch overhead at
 fixture scale, not a throughput claim: at production scale the source
@@ -92,7 +93,8 @@ def main() -> int:
     jl_src = ensure_jsonl_fixture(sf_dir)
     land = os.path.join(work, "landing")
     os.makedirs(land)
-    lines = open(jl_src, "rb").read().splitlines(keepends=True)
+    with open(jl_src, "rb") as fh:
+        lines = fh.read().splitlines(keepends=True)
     half = len(lines) // 2
     with open(f"{land}/upload-000.jsonl", "wb") as fh:
         fh.write(b"".join(lines[:half]))
@@ -159,13 +161,14 @@ def main() -> int:
     results: dict[str, dict] = {}
     for name, build in ops.items():
         runs = []
-        batches = 0
+        batches = []
         for r in range(args.runs):
             ckpt = os.path.join(work, f"ckpt_{name}_{r}")
             df, mode = build()
-            sec, batches = _drain(df, _noop_sink(ckpt, mode))
+            sec, n = _drain(df, _noop_sink(ckpt, mode))
             runs.append(round(sec, 3))
-            print(f"{name} run{r + 1}={sec:.3f}s batches={batches}", flush=True)
+            batches.append(n)
+            print(f"{name} run{r + 1}={sec:.3f}s batches={n}", flush=True)
         results[name] = {
             "min": min(runs),
             "max": max(runs),
@@ -179,7 +182,7 @@ def main() -> int:
 
     base = _ensure_band_index(spark, sf_dir)
     runs = []
-    batches = 0
+    batches = []
     for r in range(args.runs):
         copy = f"bandidx_bench_{r}"
         spark.sql(f"DROP TABLE IF EXISTS {copy}")
@@ -204,9 +207,10 @@ def main() -> int:
             q.stop()
             raise TimeoutError("band index maintenance did not finish")
         lp = q.lastProgress
-        batches = (lp["batchId"] + 1) if lp else 0
+        n = (lp["batchId"] + 1) if lp else 0
         runs.append(round(sec, 3))
-        print(f"band_index_append run{r + 1}={sec:.3f}s batches={batches}", flush=True)
+        batches.append(n)
+        print(f"band_index_append run{r + 1}={sec:.3f}s batches={n}", flush=True)
         spark.sql(f"DROP TABLE IF EXISTS {copy}")
     results["band_index_append"] = {
         "min": min(runs),

@@ -1,34 +1,33 @@
-"""Bigint argmin-packing guards (VERDICT r13 #3 + ADVICE r13 #1).
+"""Bigint argmin-packing guard (VERDICT r13 #3 + ADVICE r13 #1).
 
-Two packing families exist:
+The packed argmins left in the engine all have CONSTANT bounds:
+``embed_pq_codes``' ``min(err·K+cw)`` and the ADC cell/codeword
+argmins are exact because the id term is a compile-time constant
+(cell < 16, cw < 16), but the err term's int64 headroom depends on
+the µ-quantized component magnitude A (err ≤ dims·(2A)²). The first
+test pins the fixtures inside that envelope so an out-of-range
+regenerated fixture fails LOUDLY here instead of silently
+overflowing into a wrong argmin.
 
-* CONSTANT-bound packings (``embed_pq_codes``' ``min(err·K+cw)`` and
-  the adc cell/codeword argmins): exact because the id term is a
-  compile-time constant (cell < 16, cw < 16) — but the err term's
-  int64 headroom depends on the µ-quantized component magnitude A
-  (err ≤ dims·(2A)²). The first test pins the fixtures inside the
-  proven envelope so an out-of-range regenerated fixture fails
-  LOUDLY here instead of silently overflowing into a wrong argmin.
-
-* RUNTIME-bound packings (the adc final rollup and
-  ``agg_minmax_by``): the id/ts bounds are derived per (session,
-  fixture content) and the packed plan is only chosen when
-  ``bound_product < 2⁶³`` is PROVEN; otherwise the struct plan runs.
-  The remaining tests drive both sides of that gate on synthetic
-  fixtures and check the result against the DuckDB oracle either
-  way — the gate must change the plan, never the answer.
+The argmins whose id term is not a constant (``agg_minmax_by``,
+``events_ohlc`` open/close, the ADC final rollup) are struct
+MIN/MAXes. The remaining tests check them against the DuckDB oracle
+on adversarial synthetic fixtures: timestamp ties with and without
+NULL ids, NULL values and timestamps, non-cent values, a
+multi-century span with a 2⁴⁰ id, and ADC component magnitudes near
+the constant-bound envelope.
 """
 
 from __future__ import annotations
 
 import glob
-import os
 
 import duckdb
 import pandas as pd
 import pytest
 
 from mapreducepy_spark.registry import load_catalog
+from tests.parity_util import assert_frames_match
 
 # Tightest constant-bound site: the adc cell argmin packs
 # d·16 + cell with d ≤ 64·(2A)² ⇒ exactness needs A < sqrt(2⁶³/4096)
@@ -55,6 +54,19 @@ def test_fixture_embeddings_inside_packing_envelope(sf_path):
     )
 
 
+def _assert_matches_oracle(spark, sf: str, key: str, table: str) -> None:
+    """``key``'s Spark result over the one-table fixture ``sf`` equals
+    its DuckDB oracle's."""
+    q = load_catalog()[key]
+    spd = q.builder(spark, sf).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW {table} AS SELECT * FROM "
+        f"read_parquet('{sf}/{table}.parquet')"
+    )
+    assert_frames_match(spd, con.execute(q.oracle).fetchdf(), f"{key} {sf}")
+
+
 def _write_embeddings(tmp_path, scale: float):
     """A tiny deterministic embeddings fixture whose component
     magnitude is controlled by ``scale``."""
@@ -77,32 +89,16 @@ def _write_embeddings(tmp_path, scale: float):
 
 
 @pytest.mark.parametrize("scale", [1.0, 40.0])
-def test_adc_rollup_gate_changes_plan_never_answer(spark, tmp_path, scale):
-    """scale=1.0 sits inside the runtime envelope (packed rollup);
-    scale=40 keeps the l2 fold and the constant-bound cell packing
-    exact (A ≈ 4e7: 4096·A² ≈ 6.6e18 < 2⁶³) but blows the ROLLUP
-    gate (256·A²·B ≈ 1.6e19 > 2⁶³ for B = 40 ids ⇒ struct
-    fallback). Both must match the oracle. (Far larger magnitudes —
-    1e5+ — overflow the int64 µ-unit l2 itself, where ANSI mode
-    raises loudly on BOTH engines rather than corrupting silently;
-    that boundary is the fixture-envelope test above.)"""
+def test_adc_agreement_matches_oracle(spark, tmp_path, scale):
+    """scale=40 puts the components near the constant-bound envelope
+    while the l2 fold and the cell packing stay exact (A ≈ 4e7:
+    4096·A² ≈ 6.6e18 < 2⁶³); scale=1.0 is an ordinary corpus. Both
+    must match the oracle. (Far larger magnitudes — 1e5+ — overflow
+    the int64 µ-unit l2 itself, where ANSI mode raises loudly on BOTH
+    engines rather than corrupting silently; that boundary is the
+    fixture-envelope test above.)"""
     sf = _write_embeddings(tmp_path, scale)
-    q = load_catalog()["sim_ann_adc_agreement"]
-    spd = q.builder(spark, sf).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf}/embeddings.parquet')"
-    )
-    dpd = con.execute(q.oracle).fetchdf()
-    from tests.parity_util import assert_frames_match
-
-    assert_frames_match(spd, dpd, f"adc scale={scale}")
-    # the bounds derivation really ran (and is in the fill ledger)
-    from mapreducepy_spark import session_cache
-
-    tags = [f["tag"] for f in session_cache.fill_log()]
-    assert "adc_bounds" in tags
+    _assert_matches_oracle(spark, sf, "sim_ann_adc_agreement", "embeddings")
 
 
 def _write_events(tmp_path, rows):
@@ -117,147 +113,50 @@ def _write_events(tmp_path, rows):
     return str(d)
 
 
-def _minmax_vs_oracle(spark, sf):
-    q = load_catalog()["agg_minmax_by"]
-    spd = q.builder(spark, sf).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{sf}/events.parquet')"
-    )
-    dpd = con.execute(q.oracle).fetchdf()
-    from tests.parity_util import assert_frames_match
-
-    assert_frames_match(spd, dpd, "agg_minmax_by")
-
-
-def test_minmax_by_packed_path_handles_adversarial_ties(spark, tmp_path):
-    """Inside the envelope the packed plan runs; equal-ts ties with
-    and without NULL ids (the round-5 null-sweep shape) must decode
-    to the identical engine-agnostic picks."""
-    sf = _write_events(
-        tmp_path,
-        [
-            (5, "2024-01-01 10:00:00", 1, "view", 1.0, None),
-            (2, "2024-01-01 10:00:00", 1, "view", 2.0, None),  # ts tie
-            (None, "2024-01-01 12:00:00", 1, "view", 3.0, None),  # null id at max ts
-            (7, "2024-01-01 12:00:00", 1, "view", 4.0, None),  # ties null id
-            (1, None, 2, "click", 5.0, None),  # NULL-ts only group
-            (3, "2024-02-01 00:00:00", 3, "buy", 6.0, None),
-        ],
-    )
-    _minmax_vs_oracle(spark, sf)
-
-
-def _ohlc_vs_oracle(spark, sf):
-    q = load_catalog()["events_ohlc"]
-    spd = q.builder(spark, sf).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{sf}/events.parquet')"
-    )
-    dpd = con.execute(q.oracle).fetchdf()
-    from tests.parity_util import assert_frames_match
-
-    assert_frames_match(spd, dpd, "events_ohlc")
+# Adversarial events fixtures: (event_id, ts, user_id, event_type,
+# value, props) rows, each run through both event argmin keys.
+_EVENT_FIXTURES = {
+    # equal-ts ties with and without NULL ids (the round-5 null-sweep
+    # shape) and a NULL-ts-only group
+    "ts_ties_null_ids": [
+        (5, "2024-01-01 10:00:00", 1, "view", 1.0, None),
+        (2, "2024-01-01 10:00:00", 1, "view", 2.0, None),  # ts tie
+        (None, "2024-01-01 12:00:00", 1, "view", 3.0, None),  # null id at max ts
+        (7, "2024-01-01 12:00:00", 1, "view", 4.0, None),  # ties null id
+        (1, None, 2, "click", 5.0, None),  # NULL-ts only group
+        (3, "2024-02-01 00:00:00", 3, "buy", 6.0, None),
+    ],
+    # unique timestamps, a NULL-value open and a negative close
+    "null_open": [
+        (1, "2024-01-01 10:00:01", 1, "view", None, None),  # NULL open
+        (2, "2024-01-01 10:07:00", 1, "view", 2.25, None),
+        (3, "2024-01-01 10:29:59", 1, "view", -1.07, None),  # close < 0
+        (4, "2024-01-01 10:31:00", 1, "view", 7.00, None),  # next bar
+        (5, None, 1, "view", 9.99, None),  # NULL ts drops
+    ],
+    # equal timestamps inside one bar, one of them against a NULL id
+    "bar_ts_ties": [
+        (9, "2024-01-01 10:00:00", 1, "view", 5.00, None),
+        (2, "2024-01-01 10:00:00", 1, "view", 3.00, None),  # ts tie
+        (None, "2024-01-01 10:20:00", 1, "view", 4.00, None),
+        (7, "2024-01-01 10:20:00", 1, "view", 1.00, None),  # ties null id
+    ],
+    # a value that does not round-trip through integer cents
+    "non_cent": [
+        (1, "2024-01-01 10:00:01", 1, "view", 1.001, None),  # not cents
+        (2, "2024-01-01 10:07:00", 1, "view", 2.25, None),
+    ],
+    # a ~500-year span × a 2⁴⁰ id range: past any int64 packing
+    "wide_span": [
+        (0, "1700-01-01 00:00:00", 1, "view", 1.0, None),
+        (2**40, "2200-01-01 00:00:00", 1, "view", 2.0, None),
+        (17, "1999-06-15 12:00:00", 1, "view", 3.0, None),
+    ],
+}
 
 
-def test_ohlc_packed_path_active_and_exact(spark, tmp_path):
-    """Unique timestamps + cent-aligned values ⇒ the packed plan
-    engages (no SortAggregate) and decodes the exact doubles,
-    including a NULL-value open."""
-    sf = _write_events(
-        tmp_path,
-        [
-            (1, "2024-01-01 10:00:01", 1, "view", None, None),  # NULL open
-            (2, "2024-01-01 10:07:00", 1, "view", 2.25, None),
-            (3, "2024-01-01 10:29:59", 1, "view", -1.07, None),  # close < 0
-            (4, "2024-01-01 10:31:00", 1, "view", 7.00, None),  # next bar
-            (5, None, 1, "view", 9.99, None),  # NULL ts drops
-        ],
-    )
-    from mapreducepy_spark.operators.aggregates import (
-        _events_argminmax_bounds,
-    )
-
-    b = _events_argminmax_bounds(spark, sf)
-    assert b is not None and b["ts_unique"] and b["v_ok"]
-    q = load_catalog()["events_ohlc"]
-    from mapreducepy_spark.plans import plan_text
-
-    df = q.builder(spark, sf)
-    assert "SortAggregate" not in plan_text(df, "formatted")
-    _ohlc_vs_oracle(spark, sf)
-
-
-def test_ohlc_ts_ties_fall_back_to_struct(spark, tmp_path):
-    """Equal timestamps (the adversarial null-sweep shape) defeat
-    the ts-decides-everything proof, so the gate must keep the
-    struct plan — and still match the oracle's id/value tie-break."""
-    sf = _write_events(
-        tmp_path,
-        [
-            (9, "2024-01-01 10:00:00", 1, "view", 5.00, None),
-            (2, "2024-01-01 10:00:00", 1, "view", 3.00, None),  # ts tie
-            (None, "2024-01-01 10:20:00", 1, "view", 4.00, None),
-            (7, "2024-01-01 10:20:00", 1, "view", 1.00, None),  # ties null id
-        ],
-    )
-    from mapreducepy_spark.operators.aggregates import (
-        _events_argminmax_bounds,
-    )
-
-    b = _events_argminmax_bounds(spark, sf)
-    assert b is not None and not b["ts_unique"]
-    q = load_catalog()["events_ohlc"]
-    from mapreducepy_spark.plans import plan_text
-
-    df = q.builder(spark, sf)
-    assert "SortAggregate" in plan_text(df, "formatted")
-    _ohlc_vs_oracle(spark, sf)
-
-
-def test_ohlc_non_cent_values_fall_back_to_struct(spark, tmp_path):
-    """A value that does not round-trip through integer cents makes
-    the packed decode lossy, so v_ok must gate it off."""
-    sf = _write_events(
-        tmp_path,
-        [
-            (1, "2024-01-01 10:00:01", 1, "view", 1.001, None),  # not cents
-            (2, "2024-01-01 10:07:00", 1, "view", 2.25, None),
-        ],
-    )
-    from mapreducepy_spark.operators.aggregates import (
-        _events_argminmax_bounds,
-    )
-
-    b = _events_argminmax_bounds(spark, sf)
-    assert b is not None and not b["v_ok"]
-    _ohlc_vs_oracle(spark, sf)
-
-
-def test_minmax_by_overflow_span_falls_back_to_struct(spark, tmp_path):
-    """A ts span of ~300 years × a wide id range overflows the
-    packing product, so the gate must keep the struct plan — and the
-    answer must still match the oracle."""
-    sf = _write_events(
-        tmp_path,
-        [
-            (0, "1700-01-01 00:00:00", 1, "view", 1.0, None),
-            (2**40, "2200-01-01 00:00:00", 1, "view", 2.0, None),
-            (17, "1999-06-15 12:00:00", 1, "view", 3.0, None),
-        ],
-    )
-    from mapreducepy_spark.operators.aggregates import (
-        _events_argminmax_bounds,
-    )
-
-    b = _events_argminmax_bounds(spark, sf)
-    assert b is not None
-    t_lo, t_hi = b["t_lo"], b["t_hi"]
-    nb = b["id_hi"] - b["id_lo"] + 2
-    assert (t_hi - t_lo) > (2**63 - 1 - (nb - 1)) // nb, (
-        "fixture was meant to overflow the packing gate"
-    )
-    _minmax_vs_oracle(spark, sf)
+@pytest.mark.parametrize("key", ["agg_minmax_by", "events_ohlc"])
+@pytest.mark.parametrize("fixture", sorted(_EVENT_FIXTURES))
+def test_events_argmin_matches_oracle(spark, tmp_path, fixture, key):
+    sf = _write_events(tmp_path, _EVENT_FIXTURES[fixture])
+    _assert_matches_oracle(spark, sf, key, "events")

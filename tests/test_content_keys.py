@@ -142,3 +142,35 @@ def test_no_hand_rolled_content_key_outside_session_cache():
         if p.name != "session_cache.py" and "st_mtime_ns" in p.read_text()
     ]
     assert offenders == []
+
+
+def test_writer_module_edit_mints_new_derived_fixture(tmp_path, monkeypatch):
+    """Editing the module that defines a fixture's writer (here one
+    of its constants) must give a new path, not the copy the old
+    writer left."""
+    import importlib.util
+
+    from mapreducepy_spark.session_cache import derived_fixture
+
+    monkeypatch.setenv("MAPREDUCEPY_SPARK_FIXTURE_DIR", str(tmp_path / "fx"))
+    src = tmp_path / "documents.parquet"
+    src.write_bytes(b"source")
+    mod_path = tmp_path / "writer_mod.py"
+
+    def ensure(body: str) -> str:
+        mod_path.write_text(
+            f"BODY = {body!r}\n\n"
+            "def write(tmp):\n"
+            "    with open(tmp, 'w') as fh:\n"
+            "        fh.write(BODY)\n"
+        )
+        spec = importlib.util.spec_from_file_location("writer_mod", mod_path)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return derived_fixture(str(src), "out.txt", mod.write)
+
+    first = ensure("old")
+    second = ensure("new")
+    assert second != first
+    assert pathlib.Path(second).read_text() == "new"
+    assert pathlib.Path(first).read_text() == "old"

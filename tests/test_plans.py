@@ -504,11 +504,12 @@ def test_survivors_verified_drop_list_broadcasts(spark, sf_dir):
 
 def test_survivors_verified_build_counts_no_drop_list(spark, sf_dir):
     """Building dedup_survivors_verified with its session-cache
-    artifacts warm runs only the connected components' 4 jobs (edge
-    checkpoint, the edge count's map and result stages, driver
-    collect): the planner picks the anti-join strategy, so no action
-    counts the drop list first (that count was 2 more jobs under AQE).
-    Jobs are counted per job group, as ``bench.sweep`` counts them."""
+    artifacts warm runs only the connected components' one job (the
+    bounded edge collect that both picks the driver path and feeds
+    its union-find): the planner picks the anti-join strategy, so no
+    action counts the drop list first (that count was 2 more jobs
+    under AQE). Jobs are counted per job group, as ``bench.sweep``
+    counts them."""
     from perfbench import harness
 
     build = CATALOG["dedup_survivors_verified"].builder
@@ -517,7 +518,7 @@ def test_survivors_verified_build_counts_no_drop_list(spark, sf_dir):
     harness.timed_call(spark, group, build, spark, sf_dir)
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 4, f"{len(jobs)} jobs"
+    assert len(jobs) == 1, f"{len(jobs)} jobs"
 
 
 def test_survivors_verified_distributed_cc_still_broadcasts(spark, sf_dir, monkeypatch):
@@ -892,7 +893,7 @@ def test_threshold_sweep_never_goes_all_pairs(spark, sf_dir):
 
 
 def test_ohlc_is_single_pass_hash_aggregate(spark, sf_dir):
-    """events_ohlc: one projection + one hash aggregate with map-side
+    """events_ohlc: one projection + one SortAggregate with map-side
     combine — the argmin/argmax open/close must ride the same pass
     (no window sort, no join back)."""
     plan = plan_of(spark, "events_ohlc", sf_dir)

@@ -193,15 +193,22 @@ def test_fingerprint_sees_in_place_part_rewrite(tmp_path):
 
 
 def test_directory_fixture_part_rewrite_gives_fresh_bounds(spark, tmp_path):
-    """``scalar_cached`` packing bounds over a part-file directory must
-    follow an in-place rewrite of one part (stale bounds gate the
-    packed argmin plan of agg_minmax_by / events_ohlc)."""
-    from mapreducepy_spark.operators.aggregates import _events_argminmax_bounds
+    """A ``scalar_cached`` value computed from a part-file directory
+    must follow an in-place rewrite of one part."""
+    from pyspark.sql import functions as F
+
+    from mapreducepy_spark.io import load
+
+    def bounds():
+        return load(spark, sf, "events").agg(
+            F.max(F.unix_micros("ts")).alias("t_hi"),
+            F.max("event_id").alias("id_hi"),
+        ).collect()[0]
 
     sf = _write_events_parts(tmp_path, [[0, 1], [2, 3]])
-    b1 = _events_argminmax_bounds(spark, sf)
+    b1 = session_cache.scalar_cached(spark, sf, "events", "test_bounds", bounds)
     _write_events_parts(tmp_path, [[0, 1], [2, 3, 50]])
-    b2 = _events_argminmax_bounds(spark, sf)
+    b2 = session_cache.scalar_cached(spark, sf, "events", "test_bounds", bounds)
     assert b2["t_hi"] - b1["t_hi"] == 47 * 3600 * 10**6
     assert b2["id_hi"] == 5
 

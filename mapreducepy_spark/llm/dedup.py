@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -178,20 +179,13 @@ def _band_table(mh: DataFrame) -> DataFrame:
 
 
 def _candidate_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    shingles: DataFrame | None = None,
-    minhashes: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, minhashes: DataFrame | None = None
 ) -> DataFrame:
     """MinHash-LSH candidate pairs (doc_a < doc_b), shared by
     ``dedup_near``, ``dedup_clusters``, ``dedup_near_verified`` and
     ``dedup_minhash_est`` (the latter passes its already-materialized
     signature table as ``minhashes``)."""
-    mh = (
-        minhashes
-        if minhashes is not None
-        else _minhash_table(spark, sf_dir, shingles)
-    )
+    mh = minhashes if minhashes is not None else _minhash_table(spark, sf_dir)
     bands = _band_table(mh)
     a = bands.alias("a")
     b_ = bands.alias("b")
@@ -272,13 +266,10 @@ def _connected_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     return _cc_distributed(spark, pairs.localCheckpoint())
 
 
-def _cc_driver(spark: SparkSession, pairs) -> DataFrame:
-    """Union-find with path compression + union-by-size over a
-    (doc_a, doc_b) edge list, pandas or Spark; cluster_id = min
-    member, matching the propagation fixpoint exactly."""
-    import pandas as pd
-
-    pdf = pairs.toPandas() if isinstance(pairs, DataFrame) else pairs
+def _cc_driver(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
+    """Union-find with path compression + union-by-size over a pandas
+    (doc_a, doc_b) edge list; cluster_id = min member, matching the
+    propagation fixpoint exactly."""
     parent: dict[int, int] = {}
     size: dict[int, int] = {}
 
@@ -467,11 +458,9 @@ _JACCARD_THRESHOLD = 0.5
 #   order #2;
 # - the 8-column minhash signature table (one row per doc) and the
 #   LSH candidate-pair list — rebuilt per builder call before round
-#   9, which is exactly why ``dedup_near_verified`` tripped its 3 s
-#   driver ceiling at 4.102 s and ``dedup_minhash_est`` crossed the
-#   2 s tripwire in BENCH_r08 (VERDICT r8 work order #2: the band
-#   self-join ran once per key per timed run; now once per session
-#   per fixture).
+#   9, when the band self-join ran once per consumer key per timed
+#   run (``dedup_near_verified`` took 4.1 s in BENCH_r08); now once
+#   per session per fixture.
 #
 # Without the cache every builder call — and every one of bench.py's
 # 3 timed runs — re-pays the corpus explode / signature aggregation /
@@ -577,65 +566,37 @@ WHERE CAST(i.n_common AS DOUBLE)
 
 
 @register("dedup_ngram_jaccard", _ORACLE_DEDUP_JACCARD, tags=("llm", "dedup"))
-def dedup_ngram_jaccard(
-    spark: SparkSession, sf_dir: str, *, df_cap: int | None = None
-) -> DataFrame:
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard similarity ≥ 0.5 between document pairs.
 
     The pair space is generated by an inverted-index self-join on the
     shingle (only pairs sharing ≥1 shingle are ever materialized),
     then |A∩B| via count and |A∪B| = |A|+|B|−|A∩B|.
 
-    Scale: shuffle on shingle. The REGISTERED form (``df_cap=None``,
-    the oracle's contract) keeps every shingle in the index, so a
+    Scale: shuffle on shingle. Every shingle stays in the index, so a
     boilerplate shingle shared by d documents costs O(d²) pairs —
-    fine at fixture scale, a hot key on a power-law corpus. For
-    production, pass ``df_cap`` (same machinery as
-    ``dedup_jaccard_capped``, which is this operator with the cap
-    baked into its contract): shingles with document frequency above
-    the cap are dropped from the index BEFORE the self-join, bounding
-    the worst shingle's fan-out at O(cap²). Used as the verifier
-    behind ``dedup_near``'s candidates.
+    fine at fixture scale, a hot key on a power-law corpus, where
+    ``dedup_jaccard_capped`` (Jaccard over a document-frequency-capped
+    index) is the operator to run. Used as the verifier behind
+    ``dedup_near``'s candidates.
 
     The index is ``localCheckpoint``-ed: it feeds three plan subtrees
-    (sizes + both join sides; four with the cap's df aggregation),
-    and materializing it once replaces extra corpus explode passes
-    with block reads — same rationale as ``dedup_jaccard_capped``.
+    (sizes + both join sides), and materializing it once replaces
+    extra corpus explode passes with block reads — same rationale as
+    ``dedup_jaccard_capped``.
 
-    The REGISTERED (uncapped) pair table is itself a funnel artifact
-    since r14 (VERDICT r13 #5): two keys consume the identical
-    ≥-threshold true-pair table — this one and
-    ``dedup_minhash_recall``'s true-pair side — so the inverted-index
-    intersection runs once per (session, fixture content) instead of
-    once per consumer per timed run. The parameterized ``df_cap``
-    path (a different pair space) is never cached here.
+    The pair table is itself a funnel artifact since r14 (VERDICT r13
+    #5): two keys consume the identical ≥-threshold true-pair table —
+    this one and ``dedup_minhash_recall``'s true-pair side — so the
+    inverted-index intersection runs once per (session, fixture
+    content) instead of once per consumer per timed run.
     """
-    if df_cap is not None:
-        return _jaccard_pairs(_df_capped_index(_shingle_index(spark, sf_dir), df_cap))
     return _funnel_cached(
         spark,
         sf_dir,
         "true_jaccard_pairs",
         lambda: _jaccard_pairs(_shingle_index(spark, sf_dir)),
     )
-
-
-def _df_capped_index(sh: DataFrame, df_cap: int) -> DataFrame:
-    """Drop shingles with document frequency above ``df_cap`` from a
-    distinct (doc_id, shingle) index — the stop-shingle skew bound
-    shared by ``dedup_jaccard_capped`` and ``dedup_ngram_jaccard``'s
-    production form. One vocabulary-sized aggregation, then a
-    self-semi-join on the surviving shingles; Jaccard downstream is
-    computed over the capped index on BOTH sides (sizes and
-    intersections) — the standard drop-stopword-shingles-then-exact
-    near-dup pipeline."""
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= df_cap)
-        .select("shingle")
-    )
-    return sh.join(rare, "shingle").select("doc_id", "shingle")
 
 
 def _jaccard_pairs(sh: DataFrame) -> DataFrame:
@@ -737,8 +698,23 @@ def dedup_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncapped operator's 1.97 s, from exactly this recompute —
     VERDICT.md r2 "What's wrong" #3).
     """
+    return _jaccard_pairs(_df_capped_index(spark, sf_dir))
+
+
+def _df_capped_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The funnel's (doc_id, shingle) index without the shingles whose
+    document frequency is above ``_DF_CAP`` — the stop-shingle skew
+    bound of ``dedup_jaccard_capped`` and ``dedup_containment``. One
+    vocabulary-sized aggregation, then a self-semi-join on the
+    surviving shingles."""
     sh0 = _shingle_index(spark, sf_dir)
-    return _jaccard_pairs(_df_capped_index(sh0, _DF_CAP))
+    rare = (
+        sh0.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") <= _DF_CAP)
+        .select("shingle")
+    )
+    return sh0.join(rare, "shingle").select("doc_id", "shingle")
 
 
 # --- canonical-record selection ------------------------------------
@@ -1470,14 +1446,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # funnel via _shingle_index); the capped join is recomputed per
     # subtree from block reads — the exact dedup_jaccard_capped
     # structure (its docstring has the measured recompute cost)
-    sh0 = _shingle_index(spark, sf_dir)
-    rare = (
-        sh0.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= _DF_CAP)
-        .select("shingle")
-    )
-    sh = sh0.join(rare, "shingle").select("doc_id", "shingle")
+    sh = _df_capped_index(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shingles")
     )

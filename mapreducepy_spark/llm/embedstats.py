@@ -71,10 +71,10 @@ def _partials_cached(
     the corpus-sized Arrow fold (``embed_covariance``,
     ``embed_top_eigen``, ``embed_outlier_census``) and bench times
     each 3×, so without the cache the same input bytes are folded up
-    to 9× per session (the r8 dedup-funnel lesson, applied here
-    BEFORE it trips a driver ceiling). Two variants because the
-    consumers' row contracts differ: covariance/eigen require a
-    non-NULL vec_id, the outlier census keys rows by label only."""
+    to 9× per session (the r8 dedup-funnel lesson). Two variants
+    because the consumers' row contracts differ: covariance/eigen
+    require a non-NULL vec_id, the outlier census keys rows by label
+    only."""
     tag = "cov_partials_vid" if require_vec_id else "cov_partials_all"
 
     def build() -> DataFrame:
@@ -951,7 +951,7 @@ def embed_outlier_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer partials, O(partitions) rows pulled): the diagonal of
     # Σqqᵀ plus Σq and n are precisely the per-dim moments, and the
     # numpy fold measured ~2x faster than the equivalent 129-column
-    # JVM aggregate (which parked this key ON the 2 s bench tripwire).
+    # JVM aggregate, which took about 2 s per bench run).
     # Served from the content-keyed session cache (no-vec_id variant:
     # this census keys rows by label only).
     partials = _partials_cached(

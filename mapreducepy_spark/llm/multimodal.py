@@ -362,39 +362,18 @@ def attach_payload(docs: DataFrame, modality: str = "image") -> DataFrame:
     )
 
 
-def decode_images(payloads: DataFrame, use_real_codec: bool = False) -> DataFrame:
-    """Decode / feature-extract over Arrow batches via ``mapInPandas``.
-
-    ``use_real_codec=True`` runs the REAL stdlib BMP parser
-    (:func:`decode_bmp24` — feature = [file_bytes, sum_r, sum_g,
-    sum_b]) and raises :class:`DecoderUnavailable` for payloads in
-    any other format (compressed codecs aren't installed here); the
-    fake decoder exercises the identical batch path without format
-    constraints. Scale: batches stream through Python workers with
-    Arrow — payload bytes never hit a shuffle; output is fixed-width
-    features.
+def decode_images(payloads: DataFrame) -> DataFrame:
+    """Decode / feature-extract over Arrow batches via ``mapInPandas``
+    with the format-agnostic ``DeterministicFakeDecoder``; real BMP
+    payloads decode through :func:`bmp_decode_stats`. Scale: batches
+    stream through Python workers with Arrow — payload bytes never
+    hit a shuffle; output is fixed-width features.
     """
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd  # executor-side import
 
-        if use_real_codec:
-            def dec(payload: bytes) -> tuple[int, int, list[float]]:
-                if payload is None:
-                    return (0, 0, [0.0, 0.0, 0.0, 0.0])
-                s = decode_bmp24(bytes(payload))
-                return (
-                    s["width"],
-                    s["height"],
-                    [
-                        float(s["file_bytes"]),
-                        float(s["sum_r"]),
-                        float(s["sum_g"]),
-                        float(s["sum_b"]),
-                    ],
-                )
-        else:
-            dec = DeterministicFakeDecoder.decode
+        dec = DeterministicFakeDecoder.decode
         for pdf in batches:
             decoded = [dec(p) for p in pdf["payload"]]
             yield pd.DataFrame(

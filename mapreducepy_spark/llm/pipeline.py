@@ -720,9 +720,7 @@ FROM tot, ent
 @register(
     "docs_corpus_card", _ORACLE_CORPUS_CARD, tags=("llm", "pipeline", "profile")
 )
-def docs_corpus_card(
-    spark: SparkSession, sf_dir: str, *, exact: bool = True
-) -> DataFrame:
+def docs_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-row corpus datasheet: document/source/language counts,
     token and character mass, exact-duplicate rate (ppm), mean
     document length, and the Shannon entropy of the language mix —
@@ -733,14 +731,10 @@ def docs_corpus_card(
     the global totals aggregate, one the language histogram whose
     few-row entropy fold then broadcasts back onto the 1-row totals
     frame (the events_cooccurrence cross-join idiom; every
-    post-aggregation frame here is ≤ n_langs rows). ``exact``
-    mirrors ``scan_profile``'s contract: the oracle key keeps exact
-    distincts; ``exact=False`` swaps the corpus-sized text-digest
-    distinct for approx_count_distinct (HLL sketch, map-side merge)
-    — at 100 TB the exact digest distinct is itself a full shuffle
-    of every unique digest, and the card is a diagnostic where ±2%
-    is immaterial. Source/lang distincts stay exact in both modes
-    (their domains are small by construction).
+    post-aggregation frame here is ≤ n_langs rows). All distincts
+    are exact; the text-digest one is a shuffle of every unique
+    digest, and ``agg_approx_distinct`` is the HLL sketch key where
+    ±2% would do.
 
     Hash parity: counts and sums are integers; the two ratios are
     exact-int-divided-once under the dround formulation with
@@ -755,15 +749,11 @@ def docs_corpus_card(
         F.expr(SPARK_TOKEN_COUNT).cast("bigint").alias("n_toks"),
         F.length("text").cast("bigint").alias("n_chr"),
     )
-    n_distinct_digest = (
-        F.countDistinct("digest") if exact
-        else F.approx_count_distinct("digest")
-    )
     tot = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.countDistinct("source").cast("bigint").alias("n_sources"),
         F.countDistinct("lang").cast("bigint").alias("n_langs"),
-        n_distinct_digest.cast("bigint").alias("n_unique_texts"),
+        F.countDistinct("digest").cast("bigint").alias("n_unique_texts"),
         F.sum("n_toks").cast("bigint").alias("n_tokens"),
         F.sum("n_chr").cast("bigint").alias("n_chars"),
     )

@@ -786,10 +786,9 @@ def text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Content-keyed cache of the scored (doc, word, tf, tfidf) table:
     # before round 9 text_keywords recomputed the full tfidf pipeline
     # (tokenize → tf → df → score) per call, and bench's 3 timed runs
-    # tripled that constant — the BENCH_r08 2.036 s tripwire crossing
-    # (VERDICT r8 work order #3). text_tfidf itself stays live (its
-    # plan pins — vocabulary broadcast, spread-path ReusedExchange —
-    # are on the un-checkpointed plan, and it tripped nothing).
+    # tripled that constant (2.0 s in BENCH_r08). text_tfidf itself
+    # stays live: its plan pins — vocabulary broadcast, spread-path
+    # ReusedExchange — are on the un-checkpointed plan.
     scored = fixture_cached(
         spark,
         sf_dir,

@@ -114,38 +114,25 @@ FROM (
 
 
 @register("scan_profile", _ORACLE_SCAN_PROFILE, tags=("scan", "profile"))
-def scan_profile(
-    spark: SparkSession, sf_dir: str, *, exact: bool = True
-) -> DataFrame:
+def scan_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column profiling (rows / nulls / distincts / min / max / mean
     per column) — the first job any ingestion pipeline runs on a new
     dataset, and the statistics CBO-style optimizers feed on.
 
-    Scale: the 100 TB path is ``exact=False`` — ALL columns profile
-    in ONE aggregation over ONE scan, with ``approx_count_distinct``
-    (HyperLogLog++) keeping the per-column distinct state at
-    KB-sized sketches that merge map-side instead of shuffling every
-    distinct value (three exact distincts over a 100 TB table would
-    each shuffle the full distinct domain).
-    tests/test_plans.py pins that the approx plan really swaps the
-    aggregate (no ``count(distinct``) and stays one-scan.
-
-    The EXACT path (the registered oracle key — DuckDB parity needs
-    the true values) runs each distinct count as its OWN single-
-    column aggregation branch instead of Catalyst's multi-distinct
-    Expand rewrite (r13 optimization round): Expand replicated every
-    row 4× through one hash aggregate keyed on (value, gid) — at the
+    Each exact distinct count runs as its OWN single-column
+    aggregation branch instead of Catalyst's multi-distinct Expand
+    rewrite (r13 optimization round): Expand replicated every row 4×
+    through one hash aggregate keyed on (value, gid) — at the
     fixture's single-row-group scan that is 2.4 M rows through ONE
     task — while the branches are narrower, hash smaller per-column
     maps, and execute CONCURRENTLY (interleaved min-of-5 at sf0.1:
     1.87 → 0.95 s, identical values). The byte-cost claim is scoped
     to COLUMNAR sources (ADVICE r13): with parquet column pruning
     each branch reads only its own column, so total bytes stay ~the
-    single-scan plan's; a row-oriented source would pay ~4× the I/O
-    in exact mode — there, keep the Expand form or (better) profile
-    with the HLL path. The distinct-domain shuffles dominate either
-    way, and the exact mode is the audit path, not the 100 TB
-    default.
+    single-scan plan's; a row-oriented source would pay ~4× the I/O.
+    Where a ±2% distinct is enough, ``agg_approx_distinct`` is the
+    HyperLogLog++ key: KB-sized sketches that merge map-side instead
+    of shuffling every distinct value.
     """
     li = load(spark, sf_dir, "lineitem")
     cols = ("l_quantity", "l_extendedprice", "l_discount")
@@ -158,13 +145,10 @@ def scan_profile(
             F.max(c).alias(f"{c}__max"),
             dround(F.avg(c), 4).alias(f"{c}__avg"),
         ]
-        if not exact:
-            aggs.append(F.approx_count_distinct(c).alias(f"{c}__distinct"))
     wide = li.agg(*aggs)
-    if exact:
-        for c in cols:
-            dc = li.agg(F.countDistinct(c).alias(f"{c}__distinct"))
-            wide = wide.crossJoin(F.broadcast(dc))
+    for c in cols:
+        dc = li.agg(F.countDistinct(c).alias(f"{c}__distinct"))
+        wide = wide.crossJoin(F.broadcast(dc))
     unpivoted = F.array(
         *[
             F.struct(

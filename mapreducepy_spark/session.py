@@ -78,7 +78,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "mapreducepy_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _ENGINE_PARENT)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
     )
     if extra_conf:
         for k, v in extra_conf.items():

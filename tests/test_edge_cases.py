@@ -545,26 +545,6 @@ def test_containment_catches_truncation_jaccard_misses(spark, tmp_path):
     assert len(jacc) == 0
 
 
-def test_ngram_jaccard_df_cap_param_matches_capped_operator(spark, sf_dir):
-    """VERDICT r5 work order #4: the production ``df_cap`` parameter
-    on ``dedup_ngram_jaccard`` must route through EXACTLY the same
-    capped-index machinery as ``dedup_jaccard_capped`` — same cap in,
-    identical pairs out — and the default (the oracle contract) must
-    stay uncapped (a superset of the capped pairs on this fixture)."""
-    from mapreducepy_spark.llm.dedup import _DF_CAP, dedup_ngram_jaccard
-
-    capped_op = CATALOG["dedup_jaccard_capped"].builder(spark, sf_dir).toPandas()
-    capped_param = dedup_ngram_jaccard(spark, sf_dir, df_cap=_DF_CAP).toPandas()
-    key = ["doc_a", "doc_b", "jaccard"]
-    assert sorted(map(tuple, capped_op[key].values.tolist())) == sorted(
-        map(tuple, capped_param[key].values.tolist())
-    )
-    assert len(capped_op) > 0  # empty-vs-empty would prove nothing
-    # the default (df_cap=None) stays the uncapped oracle contract —
-    # pinned by the parity suite against _ORACLE_DEDUP_JACCARD, which
-    # has no df filter; nothing to re-assert here.
-
-
 def test_containment_dominates_jaccard(spark, sf_dir):
     """For any pair, |A∩B|/min(|A|,|B|) >= |A∩B|/|A∪B| — if a
     containment row ever shows the reverse, a denominator got

@@ -45,7 +45,7 @@ def test_decode_images_real_codec_rejects_non_bmp(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     p = mm.attach_payload(docs).limit(2)
     with pytest.raises(Exception) as exc_info:
-        mm.decode_images(p, use_real_codec=True).collect()
+        mm.bmp_decode_stats(p).collect()
     assert "DecoderUnavailable" in str(exc_info.value) or "Pillow" in str(
         exc_info.value
     )
@@ -217,31 +217,6 @@ def test_multimodal_decode_stats_matches_rule(spark, sf_dir):
         assert (row.width, row.height) == (w, h)
         assert row.file_bytes == 54 + h * mm.bmp_row_stride(w)
         assert (row.sum_r, row.sum_g, row.sum_b) == _expected_sums(d, w, h)
-
-
-def test_decode_images_real_codec_on_bmp_payloads(spark, sf_dir):
-    """decode_images(use_real_codec=True) now genuinely decodes BMP
-    payloads: feature = [file_bytes, sum_r, sum_g, sum_b]."""
-    docs = load(spark, sf_dir, "documents").limit(8)
-    payloads = mm.render_bmp_payloads(docs)
-    feats = (
-        mm.decode_images(payloads, use_real_codec=True)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    assert len(feats) == 8
-    for row in feats.itertuples():
-        d = int(row.doc_id)
-        w, h = d % 7 + 2, d % 5 + 2
-        assert (row.width, row.height) == (w, h)
-        sr, sg, sb = _expected_sums(d, w, h)
-        assert list(row.feature) == [
-            float(54 + h * mm.bmp_row_stride(w)),
-            float(sr),
-            float(sg),
-            float(sb),
-        ]
 
 
 def test_sample_frames_offsets(spark, sf_dir):

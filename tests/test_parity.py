@@ -41,7 +41,7 @@ def test_cc_driver_and_distributed_agree(spark, sf_dir):
     from mapreducepy_spark.llm import dedup as dd
 
     pairs = dd._candidate_pairs(spark, sf_dir).localCheckpoint()
-    a = dd._cc_driver(spark, pairs).toPandas()
+    a = dd._cc_driver(spark, pairs.toPandas()).toPandas()
     b = dd._cc_distributed(spark, pairs).toPandas()
     from .parity_util import canon_frame
 

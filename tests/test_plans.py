@@ -545,28 +545,19 @@ def test_cooccurrence_singles_broadcast_onto_pairs(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_scan_profile_approx_swaps_distinct_strategy(spark, sf_dir):
-    """scan_profile(exact=False) is the 100 TB path: every
-    count(distinct) becomes an approx_count_distinct HLL sketch that
-    merges map-side, and the plan stays ONE scan + one aggregate —
-    no Expand replication of the input for multi-distinct."""
-    from mapreducepy_spark.operators.scans import scan_profile
-
-    # the registered oracle key stays exact: since r13 each exact
-    # distinct is its OWN single-column branch (concurrent, narrow)
-    # — never Catalyst's Expand rewrite that replicates every input
-    # row once per distinct column through one aggregate
-    exact = plan_of(spark, "scan_profile", sf_dir)
-    assert "Expand" not in exact
-    assert exact.count("count(distinct") >= 3
-    assert "approx_count_distinct" not in exact
-    approx = plan_text(scan_profile(spark, sf_dir, exact=False), "formatted")
-    assert "approx_count_distinct" in approx
-    # the sketch path collapses to one scan + one partial/final
-    # aggregate pair: no Expand, a single Exchange
-    assert "Expand" not in approx
-    assert approx.count("(1) Scan parquet") == 1
-    assert approx.count("+- Exchange") == 1
+@pytest.mark.parametrize("name", ["scan_profile", "docs_corpus_card"])
+def test_profile_distincts_stay_exact(spark, sf_dir, name):
+    """The profiling keys count distincts exactly (the oracle needs
+    the true values; ``agg_approx_distinct`` is the HLL key). Since
+    r13 each of scan_profile's exact distincts is its OWN single-
+    column branch (concurrent, narrow) — never Catalyst's Expand
+    rewrite that replicates every input row once per distinct column
+    through one aggregate."""
+    plan = plan_of(spark, name, sf_dir)
+    assert "approx_count_distinct" not in plan
+    if name == "scan_profile":
+        assert "Expand" not in plan
+        assert plan.count("count(distinct") >= 3
 
 
 def test_lsh_band_stats_is_pure_aggregation(spark, sf_dir):
@@ -693,25 +684,6 @@ def test_mixture_apply_broadcasts_fraction_table(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "partial_sum" in plan
-
-
-def test_corpus_card_approx_swaps_digest_distinct(spark, sf_dir):
-    """docs_corpus_card(exact=False) is the 100 TB path: the
-    corpus-sized text-digest distinct becomes an HLL sketch while the
-    small source/lang distincts stay exact; numeric totals must agree
-    with the exact path (they never depend on the distinct strategy)."""
-    from mapreducepy_spark.llm.pipeline import docs_corpus_card
-
-    exact_plan = plan_of(spark, "docs_corpus_card", sf_dir)
-    assert "approx_count_distinct" not in exact_plan
-    approx_df = docs_corpus_card(spark, sf_dir, exact=False)
-    approx_plan = plan_text(approx_df, "formatted")
-    assert "approx_count_distinct(digest" in approx_plan
-    a = approx_df.collect()[0]
-    e = CATALOG["docs_corpus_card"].builder(spark, sf_dir).collect()[0]
-    for c in ("n_docs", "n_sources", "n_langs", "n_tokens", "n_chars",
-              "mean_doc_tokens", "lang_entropy"):
-        assert a[c] == e[c], c
 
 
 def test_correlated_scalar_is_decorrelated_join(spark, sf_dir):

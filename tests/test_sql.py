@@ -26,39 +26,47 @@ def test_non_portable_raises(spark, sf_dir):
         engine_sql.run_sql(spark, sf_dir, "text_stats")
 
 
-def test_key_order_covers_registry_exactly():
-    """_KEY_ORDER is evidence policy (drives the driver's bounded
-    correctness run) — a registered key missing from it silently lands
-    at the tail, so keep the two sets identical and duplicate-free."""
+def test_load_catalog_orders_by_oracle_evidence(monkeypatch, tmp_path):
+    """The catalog order is computed from the correctness ledgers:
+    never-green keys lead, then the stalest green evidence, and the
+    oracle-less keys go last — the driver's bounded window always
+    reaches the keys with the least evidence."""
+    import json
+
     from mapreducepy_spark import registry
 
-    assert len(registry._KEY_ORDER) == len(set(registry._KEY_ORDER))
-    assert set(registry._KEY_ORDER) == set(CATALOG)
-    assert list(CATALOG) == list(registry._KEY_ORDER)
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "err": None}
+    red = dict(green, hash_match=False)
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(
+        {"scan_count": green, "join_inner": green, "agg_group": red,
+         "fn_math": "not a row"}))
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps(
+        {"join_inner": green, "scan_project": green}))
+    monkeypatch.setattr(registry, "_LEDGER_DIR", tmp_path)
+    order = list(registry.load_catalog())
+    pos = order.index
+    assert set(order) == set(registry.REGISTRY) and len(order) == len(registry.REGISTRY)
+    # never green (red, malformed or absent) < last green r1 < last
+    # green r2, and a tie on the last round goes to the older first one
+    for never in ("agg_group", "fn_math", "win_rank"):
+        assert pos(never) < pos("scan_count")
+    assert pos("scan_count") < pos("join_inner") < pos("scan_project")
+    n_oracle = sum(q.oracle is not None for q in registry.REGISTRY.values())
+    assert all(registry.REGISTRY[k].oracle is None for k in order[n_oracle:])
+    assert "agg_approx_distinct" in order[n_oracle:]
 
 
-def test_load_catalog_raises_on_unordered_key(monkeypatch):
-    """load_catalog must fail LOUD when a registered key is missing
-    from _KEY_ORDER (round-2 postmortem: silent alphabetical-tail
-    fallback shipped five operators with zero oracle evidence)."""
-    from mapreducepy_spark import registry
+def test_registered_builders_take_spark_and_sf_dir_only():
+    """queries() hands the driver ``(spark, sf_dir)`` builders: a
+    keyword option on a registered builder is a second plan no caller
+    of the catalog can select."""
+    import inspect
 
-    ghost = registry.Query(name="zz_ghost", builder=lambda s, d: None, oracle=None)
-    monkeypatch.setitem(registry.REGISTRY, "zz_ghost", ghost)
-    with pytest.raises(RuntimeError, match="zz_ghost"):
-        registry.load_catalog()
-
-
-def test_load_catalog_raises_on_phantom_key(monkeypatch):
-    """...and equally when _KEY_ORDER names a key nobody registered
-    (typo guard for the rotation itself)."""
-    from mapreducepy_spark import registry
-
-    monkeypatch.setattr(
-        registry, "_KEY_ORDER", registry._KEY_ORDER + ("zz_phantom",)
-    )
-    with pytest.raises(RuntimeError, match="zz_phantom"):
-        registry.load_catalog()
+    for name, q in CATALOG.items():
+        params = list(inspect.signature(q.builder).parameters.values())
+        assert [p.name for p in params] == ["spark", "sf_dir"], name
+        assert all(p.default is inspect.Parameter.empty for p in params), name
 
 
 def test_migration_doc_counts_match_code():

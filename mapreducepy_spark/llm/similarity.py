@@ -43,6 +43,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from .. import session_cache
 from ..io import load
@@ -198,7 +199,7 @@ def _corpus_chunk_broadcasts(
         if len(pdf) == 0:  # residue class emptied by the dim filter
             continue
         ids = pdf["vec_id"].to_numpy(np.int64)
-        cu = _np_unit(np.stack(pdf["embedding"].to_list()).astype(np.float64))
+        cu = _pdf_units(pdf)
         out.append(spark.sparkContext.broadcast((ids, cu)))
     return out
 
@@ -236,6 +237,104 @@ def _query_side(spark: SparkSession, emb: DataFrame) -> DataFrame:
     return emb.repartition(spark.sparkContext.defaultParallelism)
 
 
+# --- the one exact top-k rule ------------------------------------------
+# Every kNN/ANN key is candidate generation (the whole corpus, a chunk,
+# a bucket, a cell) plus this ONE verification step per group, so the
+# duplicate-id and tie-break contracts cannot drift between keys.
+
+
+def _pdf_units(pdf: pd.DataFrame) -> np.ndarray:
+    """Unit matrix of a pandas frame's ``embedding`` column
+    (``(0, _DIM)`` for an empty frame)."""
+    if len(pdf) == 0:
+        return np.empty((0, _DIM))
+    return _np_unit(np.stack(pdf["embedding"].to_list()).astype(np.float64))
+
+
+def _masked_topk(
+    q_ids: np.ndarray, qu: np.ndarray, m_ids: np.ndarray, mu: np.ndarray,
+    k: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each query row's ``k`` best members by (cosine DESC, id ASC),
+    after masking EVERY member whose id equals the query's — the
+    oracles' ``a.vec_id <> b.vec_id``, however many rows share the id.
+
+    Per row, an O(n) ``np.partition`` cut at the k-th largest masked
+    value keeps every member that can rank in the top k (ties at the
+    cut included via >=), and only that survivor set is lexsorted —
+    exactly the full sort's answer. A query with fewer than ``k``
+    distinct-id members emits fewer rows. Returns (query row, member
+    row, unrounded cosine) arrays."""
+    sim = _np_cos(qu, mu)
+    sim[q_ids[:, None] == m_ids[None, :]] = -np.inf
+    n_cut = min(k, sim.shape[1])
+    qi: list[int] = []
+    mj: list[int] = []
+    for i in range(len(q_ids) if n_cut else 0):  # no members, no rows
+        row = sim[i]
+        kth = np.partition(row, -n_cut)[-n_cut]
+        cand = np.nonzero(row >= kth)[0]
+        order = cand[np.lexsort((m_ids[cand], -row[cand]))]
+        order = order[row[order] > -np.inf][:k]
+        qi += [i] * len(order)
+        mj += order.tolist()
+    qi_a = np.asarray(qi, np.int64)
+    mj_a = np.asarray(mj, np.int64)
+    return qi_a, mj_a, sim[qi_a, mj_a]
+
+
+def _group_top1(carry: tuple[str, ...], members=None):
+    """The one ``applyInPandas`` kernel of the ANN keys, returned with
+    its output schema: every row of the group queries the group's
+    members (all rows, or ``members(pdf)``) for its masked top-1, and
+    the query row's ``carry`` int columns ride along. The cosine stays
+    unrounded (``cos_raw``) so ``_best_per_query`` ranks on the value
+    the oracle ranks on."""
+
+    def top1(pdf: pd.DataFrame) -> pd.DataFrame:
+        mem = pdf if members is None else members(pdf)
+        q_ids = pdf["vec_id"].to_numpy(np.int64)
+        m_ids = mem["vec_id"].to_numpy(np.int64)
+        qu = _pdf_units(pdf)
+        mu = qu if members is None else _pdf_units(mem)
+        qi, mj, cos = _masked_topk(q_ids, qu, m_ids, mu, 1)
+        return pd.DataFrame(
+            {
+                "query_id": q_ids[qi],
+                "neighbor_id": m_ids[mj],
+                **{c: pdf[c].to_numpy(np.int32)[qi] for c in carry},
+                "cos_raw": cos,
+            }
+        )
+
+    cols = "".join(f"{c} int, " for c in carry)
+    return top1, f"query_id bigint, neighbor_id bigint, {cols}cos_raw double"
+
+
+def _best_per_query(
+    partial: DataFrame, carry: tuple[str, ...] = (), k: int = 1
+) -> DataFrame:
+    """The one collapse window: ``k`` rows per distinct query_id,
+    ranked (cos_raw DESC, neighbor_id ASC, carry ASC) on the UNROUNDED
+    cosine like the oracles, rounding once at the end. It merges
+    per-chunk partials, and it folds rows sharing a vec_id into one
+    query identity (the duplicate-id sweep); with unique ids and one
+    group per row it is a no-op on the answer. ``carry`` completes the
+    tie-break: duplicate ids with different payloads can reach the
+    same (cos, neighbor) from two groups."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_raw").desc(), F.col("neighbor_id").asc(),
+        *[F.col(c).asc() for c in carry],
+    )
+    return (
+        partial.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(
+            "query_id", "neighbor_id", *carry,
+            dround("cos_raw", 6).alias("cos_sim"),
+        )
+    )
+
 
 _K = 3
 
@@ -264,52 +363,18 @@ WHERE rn <= {_K}
 
 def _chunk_topk_kernel(bc):
     """Per-chunk partial top-K kernel (closure over ONE chunk
-    broadcast): emits each query's K best neighbors WITHIN the chunk
+    broadcast): emits each query row's masked top-K WITHIN the chunk
     at full double precision — the global top-K is necessarily a
-    subset of the union of per-chunk top-Ks, so the window merge in
-    ``sim_knn`` reconstructs the exact all-pairs answer."""
+    subset of the union of per-chunk top-Ks, so ``_best_per_query``
+    reconstructs the exact all-pairs answer."""
 
     def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_c, cu = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
             q_ids = pdf["vec_id"].to_numpy(np.int64)
-            qu = _np_unit(np.stack(pdf["embedding"].to_list()).astype(np.float64))
-            sim = _np_cos(qu, cu)
-            out_q: list[int] = []
-            out_n: list[int] = []
-            out_c: list[float] = []
-            n_cand = min(_K + 1, sim.shape[1])  # +1 covers self
-            for i, qid in enumerate(q_ids):
-                row = sim[i]
-                # O(n) candidate cut, then exact order on the tiny
-                # survivor set: every possible top-K member has
-                # value >= the (K+1)-th largest (ties included via
-                # >=), so this is EXACTLY the full lexsort's result
-                # at O(n) instead of O(n log n) per row
-                kth = np.partition(row, -n_cand)[-n_cand]
-                cand = np.nonzero(row >= kth)[0]
-                # primary: cos desc; secondary: neighbor_id asc
-                order = cand[np.lexsort((ids_c[cand], -row[cand]))]
-                taken = 0
-                for j in order:
-                    if ids_c[j] == qid:
-                        continue
-                    out_q.append(qid)
-                    out_n.append(int(ids_c[j]))
-                    out_c.append(row[j])
-                    taken += 1
-                    if taken == _K:
-                        break
+            qi, cj, cos = _masked_topk(q_ids, _pdf_units(pdf), ids_c, cu, _K)
             yield pd.DataFrame(
-                {
-                    "query_id": np.asarray(out_q, np.int64),
-                    "neighbor_id": np.asarray(out_n, np.int64),
-                    # full precision — the merge window must rank on
-                    # the exact cosine (the oracle ranks pre-rounding)
-                    "cos_raw": np.asarray(out_c, np.float64),
-                }
+                {"query_id": q_ids[qi], "neighbor_id": ids_c[cj], "cos_raw": cos}
             )
 
     return topk
@@ -366,21 +431,8 @@ def _build_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _corpus_broadcasts_for(spark, sf_dir),
     )
     if partial is None:
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, cos_sim double"
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            dround("cos_raw", 6).alias("cos_sim"),
-        )
-    )
+        partial = spark.createDataFrame([], schema)
+    return _best_per_query(partial, k=_K)
 
 
 # --- sign-LSH bucketed ANN ----------------------------------------
@@ -493,68 +545,12 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _valid_embeddings(load(spark, sf_dir, "embeddings"))
         .select("vec_id", "embedding")
     )
-    bucketed = emb.withColumn("bucket", _sign_bucket_col())
-
-    def bucket_top1(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int64"),
-                    "neighbor_id": pd.Series(dtype="int64"),
-                    "bucket": pd.Series(dtype="int32"),
-                    "cos_raw": pd.Series(dtype="float64"),
-                }
-            )
-        ids = pdf["vec_id"].to_numpy(np.int64)
-        unit = _np_unit(np.stack(pdf["embedding"].to_list()).astype(np.float64))
-        sim = _np_cos(unit, unit)
-        np.fill_diagonal(sim, -np.inf)  # exclude self
-        out_n = np.empty(len(ids), np.int64)
-        out_c = np.empty(len(ids), np.float64)
-        keep = np.ones(len(ids), bool)
-        for i in range(len(ids)):
-            # mask EVERY same-id candidate (not a one-step fallback):
-            # with 3+ rows sharing a vec_id in one bucket the fallback
-            # could pick a same-id neighbor the oracle's
-            # a.vec_id <> b.vec_id filter rejects (ADVICE r8)
-            masked = np.where(ids == ids[i], -np.inf, sim[i])
-            j = int(np.lexsort((ids, -masked))[0])
-            if masked[j] == -np.inf:
-                keep[i] = False  # bucket holds no distinct-id neighbor
-                continue
-            out_n[i] = ids[j]
-            out_c[i] = masked[j]
-        return pd.DataFrame(
-            {
-                "query_id": ids[keep],
-                "neighbor_id": out_n[keep],
-                "bucket": np.full(
-                    int(keep.sum()), pdf["bucket"].iloc[0], np.int32
-                ),
-                # full precision — the collapse window must rank on
-                # the exact cosine (the oracle ranks pre-rounding)
-                "cos_raw": out_c[keep],
-            }
-        )
-
-    partial = bucketed.groupBy("bucket").applyInPandas(
-        bucket_top1,
-        "query_id bigint, neighbor_id bigint, bucket int, cos_raw double",
+    partial = (
+        emb.withColumn("bucket", _sign_bucket_col())
+        .groupBy("bucket")
+        .applyInPandas(*_group_top1(("bucket",)))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc(),
-        F.col("bucket").asc(),
-    )
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "bucket",
-            dround("cos_raw", 6).alias("cos_sim"),
-        )
-    )
+    return _best_per_query(partial, ("bucket",))
 
 
 # --- multi-table sign-LSH probe --------------------------------------
@@ -653,76 +649,16 @@ def sim_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
     )
 
-    def table_top1(table: int):
-        def top1(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) < 2:
-                return pd.DataFrame(
-                    {
-                        "query_id": pd.Series(dtype="int64"),
-                        "neighbor_id": pd.Series(dtype="int64"),
-                        "cos_raw": pd.Series(dtype="float64"),
-                        "src_table": pd.Series(dtype="int32"),
-                    }
-                )
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            unit = _np_unit(
-                np.stack(pdf["embedding"].to_list()).astype(np.float64)
-            )
-            sim = _np_cos(unit, unit)
-            np.fill_diagonal(sim, -np.inf)
-            out_n = np.empty(len(ids), np.int64)
-            out_c = np.empty(len(ids), np.float64)
-            keep = np.ones(len(ids), bool)
-            for i in range(len(ids)):
-                # full same-id mask — see the sim_ann_lsh kernel
-                # (ADVICE r8: this key was the flagged instance)
-                masked = np.where(ids == ids[i], -np.inf, sim[i])
-                j = int(np.lexsort((ids, -masked))[0])
-                if masked[j] == -np.inf:
-                    keep[i] = False
-                    continue
-                out_n[i] = ids[j]
-                out_c[i] = masked[j]
-            return pd.DataFrame(
-                {
-                    "query_id": ids[keep],
-                    "neighbor_id": out_n[keep],
-                    # full precision — the combine window must rank on
-                    # the exact cosine (the sim_ann_lsh cos_raw
-                    # contract; ADVICE r9)
-                    "cos_raw": out_c[keep],
-                    "src_table": np.full(int(keep.sum()), table, np.int32),
-                }
-            )
-
-        return top1
-
-    schema = (
-        "query_id bigint, neighbor_id bigint, cos_raw double, "
-        "src_table int"
-    )
     tables = [
         emb.withColumn("bucket", _sign_bucket_col(t * _N_PLANES))
+        .withColumn("src_table", F.lit(t))
         .groupBy("bucket")
-        .applyInPandas(table_top1(t), schema)
+        .applyInPandas(*_group_top1(("src_table",)))
         for t in range(_N_TABLES)
     ]
-    u = tables[0].unionByName(tables[1])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(),
-        F.col("neighbor_id").asc(),
-        F.col("src_table").asc(),
-    )
-    return (
-        u.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "query_id",
-            "neighbor_id",
-            dround("cos_raw", 6).alias("cos_sim"),
-            "src_table",
-        )
-    )
+    return _best_per_query(
+        tables[0].unionByName(tables[1]), ("src_table",)
+    ).select("query_id", "neighbor_id", "cos_sim", "src_table")
 
 
 # Near-dup cutoff. A production corpus would use ~0.9+; the fixture
@@ -770,13 +706,8 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         def near_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             ids_c, cu = bc.value
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
                 q_ids = pdf["vec_id"].to_numpy(np.int64)
-                qu = _np_unit(
-                    np.stack(pdf["embedding"].to_list()).astype(np.float64)
-                )
-                sim = _np_cos(qu, cu)
+                sim = _np_cos(_pdf_units(pdf), cu)
                 mask = (sim >= _DUP_THRESHOLD) & (q_ids[:, None] < ids_c[None, :])
                 qi, cj = np.nonzero(mask)
                 yield pd.DataFrame(
@@ -823,14 +754,44 @@ def _ivf_quantizer(spark, sf_dir, emb):
         cent_pdf = emb.orderBy(F.col("vec_id").asc()).limit(_N_CELLS).toPandas()
         if len(cent_pdf) == 0:
             return None
-        cent = _np_unit(
-            np.stack(cent_pdf["embedding"].to_list()).astype(np.float64)
-        )
+        cent = _pdf_units(cent_pdf)
         return spark.sparkContext.broadcast(cent)
 
     return session_cache.scalar_cached(
         spark, sf_dir, "embeddings", f"ivf_quantizer/{_N_CELLS}", compute
     )
+
+
+def _ivf_probes(
+    emb: DataFrame, bc_cent, n_probe: int,
+    keep: tuple[str, ...] = ("vec_id", "embedding"),
+) -> DataFrame:
+    """The one IVF cell assignment, a narrow ``mapInPandas`` (GEMM vs
+    the broadcast centroids, no shuffle): every row fans out to its
+    ``n_probe`` nearest cells as (``keep`` columns, cell, probe),
+    probe 1 being the home cell. A stable argsort of −cos ranks the
+    cells, so ties take the lowest cell id — the oracles'
+    (cos DESC, cell ASC), and ``argmax``'s pick for finite cosines."""
+    n_probe = min(n_probe, bc_cent.value.shape[0])
+
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        c = bc_cent.value
+        for pdf in batches:
+            sim = _np_cos(_pdf_units(pdf), c)
+            top = np.argsort(-sim, axis=1, kind="stable")[:, :n_probe]
+            rep = np.repeat(np.arange(len(pdf)), n_probe)
+            out = pdf[list(keep)].iloc[rep].reset_index(drop=True)
+            out["cell"] = top.reshape(-1).astype(np.int32)
+            out["probe"] = np.tile(
+                np.arange(1, n_probe + 1, dtype=np.int32), len(pdf)
+            )
+            yield out
+
+    schema = (
+        emb.select(*keep).schema
+        .add("cell", IntegerType()).add("probe", IntegerType())
+    )
+    return emb.mapInPandas(assign, schema)
 
 
 _ORACLE_SIM_ANN_IVF = f"""
@@ -906,83 +867,12 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id bigint, neighbor_id bigint, cell int, cos_sim double"
         )
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc_cent.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qu = _np_unit(np.stack(pdf["embedding"].to_list()).astype(np.float64))
-            sim = _np_cos(qu, c)
-            # argmax = first max ⇒ lowest cell id on ties (oracle order)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "embedding": pdf["embedding"],
-                    "cell": np.argmax(sim, axis=1).astype(np.int32),
-                }
-            )
-
-    assigned = emb.mapInPandas(
-        assign, "vec_id bigint, embedding array<float>, cell int"
+    partial = (
+        _ivf_probes(emb, bc_cent, 1)
+        .groupBy("cell")
+        .applyInPandas(*_group_top1(("cell",)))
     )
-
-    def cell_top1(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int64"),
-                    "neighbor_id": pd.Series(dtype="int64"),
-                    "cell": pd.Series(dtype="int32"),
-                    "cos_raw": pd.Series(dtype="float64"),
-                }
-            )
-        ids = pdf["vec_id"].to_numpy(np.int64)
-        unit = _np_unit(np.stack(pdf["embedding"].to_list()).astype(np.float64))
-        sim = _np_cos(unit, unit)
-        np.fill_diagonal(sim, -np.inf)
-        out_n = np.empty(len(ids), np.int64)
-        out_c = np.empty(len(ids), np.float64)
-        keep = np.ones(len(ids), bool)
-        for i in range(len(ids)):
-            # full same-id mask — see the sim_ann_lsh kernel (ADVICE r8)
-            masked = np.where(ids == ids[i], -np.inf, sim[i])
-            j = int(np.lexsort((ids, -masked))[0])
-            if masked[j] == -np.inf:
-                keep[i] = False
-                continue
-            out_n[i] = ids[j]
-            out_c[i] = masked[j]
-        return pd.DataFrame(
-            {
-                "query_id": ids[keep],
-                "neighbor_id": out_n[keep],
-                "cell": np.full(
-                    int(keep.sum()), pdf["cell"].iloc[0], np.int32
-                ),
-                "cos_raw": out_c[keep],
-            }
-        )
-
-    partial = assigned.groupBy("cell").applyInPandas(
-        cell_top1,
-        "query_id bigint, neighbor_id bigint, cell int, cos_raw double",
-    )
-    # one row per distinct query_id, ranked on the unrounded cosine —
-    # the sim_ann_lsh collapse contract (duplicate-id sweep)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc(),
-        F.col("cell").asc(),
-    )
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell",
-            dround("cos_raw", 6).alias("cos_sim"),
-        )
-    )
+    return _best_per_query(partial, ("cell",))
 
 
 # --- multi-probe IVF ------------------------------------------------
@@ -1091,100 +981,16 @@ def sim_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc_cent = _ivf_quantizer(spark, sf_dir, emb)
     if bc_cent is None:
         return spark.createDataFrame([], out_schema)
-    n_probe = min(_N_PROBE, bc_cent.value.shape[0])
-
-    def assign_probes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc_cent.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qu = _np_unit(np.stack(pdf["embedding"].to_list()).astype(np.float64))
-            sim = _np_cos(qu, c)
-            # stable argsort of −sim ⇒ ties take the lowest cell id
-            # (the oracle's cos DESC, cell ASC), probe rank = column
-            top = np.argsort(-sim, axis=1, kind="stable")[:, :n_probe]
-            n = len(pdf)
-            rep = np.repeat(np.arange(n), n_probe)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64)[rep],
-                    "embedding": pdf["embedding"].iloc[rep].reset_index(
-                        drop=True
-                    ),
-                    "cell": top.reshape(-1).astype(np.int32),
-                    "probe": np.tile(
-                        np.arange(1, n_probe + 1, dtype=np.int32), n
-                    ),
-                }
-            )
-
-    probes = emb.mapInPandas(
-        assign_probes,
-        "vec_id bigint, embedding array<float>, cell int, probe int",
-    )
-
-    def cell_top1(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int64"),
-                "neighbor_id": pd.Series(dtype="int64"),
-                "cell": pd.Series(dtype="int32"),
-                "probe": pd.Series(dtype="int32"),
-                "cos_raw": pd.Series(dtype="float64"),
-            }
-        )
-        mem = pdf[pdf["probe"] == 1]
-        if len(pdf) == 0 or len(mem) == 0:
-            return empty
-        ids_q = pdf["vec_id"].to_numpy(np.int64)
-        ids_m = mem["vec_id"].to_numpy(np.int64)
-        qu = _np_unit(np.stack(pdf["embedding"].to_list()).astype(np.float64))
-        mu = _np_unit(np.stack(mem["embedding"].to_list()).astype(np.float64))
-        sim = _np_cos(qu, mu)
-        out_n = np.empty(len(ids_q), np.int64)
-        out_c = np.empty(len(ids_q), np.float64)
-        keep = np.ones(len(ids_q), bool)
-        for i in range(len(ids_q)):
-            # full same-id mask — the sim_ann_lsh kernel contract
-            masked = np.where(ids_m == ids_q[i], -np.inf, sim[i])
-            j = int(np.lexsort((ids_m, -masked))[0])
-            if masked[j] == -np.inf:
-                keep[i] = False
-                continue
-            out_n[i] = ids_m[j]
-            out_c[i] = masked[j]
-        return pd.DataFrame(
-            {
-                "query_id": ids_q[keep],
-                "neighbor_id": out_n[keep],
-                "cell": np.full(
-                    int(keep.sum()), pdf["cell"].iloc[0], np.int32
-                ),
-                "probe": pdf["probe"].to_numpy(np.int32)[keep],
-                "cos_raw": out_c[keep],
-            }
-        )
-
-    partial = probes.groupBy("cell").applyInPandas(
-        cell_top1,
-        "query_id bigint, neighbor_id bigint, cell int, probe int, "
-        "cos_raw double",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_raw").desc(), F.col("neighbor_id").asc(),
-        F.col("cell").asc(), F.col("probe").asc(),
-    )
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell",
-            "probe",
-            dround("cos_raw", 6).alias("cos_sim"),
+    carry = ("cell", "probe")
+    partial = (
+        _ivf_probes(emb, bc_cent, _N_PROBE)
+        .groupBy("cell")
+        .applyInPandas(
+            # every probing row queries the cell's home members only
+            *_group_top1(carry, members=lambda pdf: pdf[pdf["probe"] == 1])
         )
     )
+    return _best_per_query(partial, carry)
 
 
 def _recall_ledger_sql(
@@ -1344,20 +1150,8 @@ def sim_ann_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     if bc_cent is None:
         return spark.createDataFrame([], out_schema)
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c = bc_cent.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qu = _np_unit(np.stack(pdf["embedding"].to_list()).astype(np.float64))
-            sim = _np_cos(qu, c)
-            yield pd.DataFrame(
-                {"cell": np.argmax(sim, axis=1).astype(np.int32)}
-            )
-
     counts = (
-        emb
-        .mapInPandas(assign, "cell int")
+        _ivf_probes(emb, bc_cent, 1, keep=())
         .groupBy("cell")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_members"))
     )
@@ -1395,18 +1189,14 @@ def kmeans_fit(
     pins behavior instead.
     """
     pdf0 = emb.orderBy(F.col("vec_id").asc()).limit(k).toPandas()
-    cent = _np_unit(np.stack(pdf0["embedding"].to_list()).astype(np.float64))
+    cent = _pdf_units(pdf0)
     for _ in range(n_iters):
         bc = spark.sparkContext.broadcast(cent)
 
         def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             c = bc.value
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                qu = _np_unit(
-                    np.stack(pdf["embedding"].to_list()).astype(np.float64)
-                )
+                qu = _pdf_units(pdf)
                 cell = np.argmax(_np_cos(qu, c), axis=1).astype(np.int32)
                 out = pd.DataFrame(
                     qu, columns=[f"d{i}" for i in range(qu.shape[1])]

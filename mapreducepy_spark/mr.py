@@ -149,8 +149,9 @@ class MRJob:
     """Subclass-style job spec (the shape MR frameworks expose).
 
     Override ``mapper`` / ``reducer`` (and optionally ``combiner``,
-    ``mapper_init`` / ``mapper_final``); run with :func:`run_job` or
-    chain with :func:`run_pipeline`. Multi-pass programs may instead
+    ``mapper_init`` / ``mapper_final``); run with :func:`run_mrjob`
+    or chain with :func:`run_pipeline`. A ``combiner`` runs exactly
+    when the subclass defines one. Multi-pass programs may instead
     override :meth:`steps` to return a list of :class:`MRStep` — the
     steps run back-to-back, each step's output pairs feeding the
     next, with no driver round-trip between them (the chained RDD
@@ -179,13 +180,6 @@ class MRJob:
         """Per-partition teardown hook; may emit trailing pairs (the
         mrjob-style in-mapper-combining flush)."""
         return ()
-
-    def combiner(self, key: Any, values: Iterable[Any]) -> Iterable[KV]:
-        # default: identity pass-through (no local combine)
-        for v in values:
-            yield (key, v)
-
-    combiner_defined = False  # subclasses setting a real combiner flip this
 
     def reducer(self, key: Any, values: Iterable[Any]) -> Iterable[KV]:
         yield (key, list(values))
@@ -486,7 +480,7 @@ def _warn_ignored_overrides(job: MRJob, steps) -> None:
     ignored = [
         name
         for name in ("mapper", "combiner", "reducer")
-        if getattr(cls, name) is not getattr(MRJob, name)
+        if getattr(cls, name, None) is not getattr(MRJob, name, None)
         and getattr(cls, name) not in step_fns
     ]
     # hooks run ONLY on the classic path — referenced or not
@@ -506,21 +500,27 @@ def _warn_ignored_overrides(job: MRJob, steps) -> None:
         )
 
 
-def run_mrjob(spark: SparkSession, job: MRJob, records, **kw):
+def run_mrjob(
+    spark: SparkSession,
+    job: MRJob,
+    records,
+    *,
+    num_partitions: int | None = None,
+    associative_reduce: Callable[[Any, Any], Any] | None = None,
+    sort_values_by: Callable[[Any], Any] | None = None,
+):
     """Run a subclass-style :class:`MRJob`. ``mapper_init`` /
     ``mapper_final`` hooks run once per partition around the map
     phase (so in-mapper combining state lives across records and is
     flushed at partition end). A job overriding :meth:`MRJob.steps`
     runs its steps back-to-back instead (options then live ON the
-    steps — passing ``**kw`` here would be ambiguous and raises, and
+    steps — passing an option here would be ambiguous and raises, and
     an overridden classic surface the steps don't reference warns
     loudly instead of silently never running)."""
-    unknown = set(kw) - {"num_partitions", "associative_reduce", "sort_values_by"}
-    if unknown:
-        raise TypeError(f"run_mrjob: unknown options {sorted(unknown)!r}")
     steps = job.steps()
     if steps is not None:
-        if kw:
+        options = (num_partitions, associative_reduce, sort_values_by)
+        if any(o is not None for o in options):
             raise TypeError(
                 "run_mrjob: a multi-step job carries its options on "
                 "each MRStep; per-run options would silently apply "
@@ -533,17 +533,15 @@ def run_mrjob(spark: SparkSession, job: MRJob, records, **kw):
         for step in steps:
             out = _run_step(spark, step, out)
         return out
-    combiner = job.combiner if job.combiner_defined else None
-    num_partitions = kw.get("num_partitions")
     rdd = _input_rdd(spark, records, num_partitions)
     mapped = rdd.mapPartitions(_map_partitions_with_hooks(job))
     return _shuffle_reduce(
         mapped,
         job.reducer,
-        combiner,
+        getattr(job, "combiner", None),
         num_partitions,
-        kw.get("associative_reduce"),
-        kw.get("sort_values_by"),
+        associative_reduce,
+        sort_values_by,
     )
 
 

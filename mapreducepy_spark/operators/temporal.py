@@ -41,23 +41,13 @@ def win_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ``window()`` is a plain projection (bucket = floor(ts)) +
     hash aggregate — partial agg collapses each partition to
-    #buckets×#types rows before the shuffle. Streaming twin:
-    ``streaming.windows.tumbling_counts``.
+    #buckets×#types rows before the shuffle. One expression tree with
+    the streaming twin ``streaming.windows.tumbling_counts`` (the
+    ``ohlc_aggregate`` rule), applied here to the batch table.
     """
-    e = load(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dround(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("bucket_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    from ..streaming.windows import tumbling_counts
+
+    return tumbling_counts(load(spark, sf_dir, "events"))
 
 
 _ORACLE_WIN_SLIDING = """
@@ -85,17 +75,12 @@ def win_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a 2-way UNION ALL of shifted 5-min buckets).
 
     Scale: row expansion factor = length/slide — keep it small;
-    aggregate state is per-bucket, merged map-side.
+    aggregate state is per-bucket, merged map-side. One expression
+    tree with the streaming twin ``streaming.windows.sliding_sums``.
     """
-    e = load(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dround(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("bucket_start"), "n_events", "sum_value")
-    )
+    from ..streaming.windows import sliding_sums
+
+    return sliding_sums(load(spark, sf_dir, "events"))
 
 
 _SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes

@@ -53,16 +53,20 @@ def read_orders_stream(
     )
 
 
-def _latest_version(state_dir: str) -> str | None:
+def _latest_version(state_dir: str, before: int | None = None) -> str | None:
+    """Path of the newest ``v=<n>`` state version (only versions
+    below ``before`` when given), or None when there is none."""
     if not os.path.isdir(state_dir):
         return None
     vs = [
-        d for d in os.listdir(state_dir)
+        int(d[2:])
+        for d in os.listdir(state_dir)
         if d.startswith("v=") and d[2:].isdigit()
+        and (before is None or int(d[2:]) < before)
     ]
     if not vs:
         return None
-    return os.path.join(state_dir, max(vs, key=lambda d: int(d[2:])))
+    return os.path.join(state_dir, f"v={max(vs)}")
 
 
 def apply_changes_batch(spark: SparkSession, state_dir: str):
@@ -79,7 +83,7 @@ def apply_changes_batch(spark: SparkSession, state_dir: str):
         # micro-batch N owns version N+1 (the base seed is v=0, and
         # batch ids start at 0 — the +1 keeps the seed distinct)
         version = batch_id + 1
-        prev = _latest_version_before(state_dir, version)
+        prev = _latest_version(state_dir, before=version)
         chg = orders_changelog(batch_df)
         if prev is None:
             unioned = chg
@@ -90,19 +94,6 @@ def apply_changes_batch(spark: SparkSession, state_dir: str):
         )
 
     return apply
-
-
-def _latest_version_before(state_dir: str, version: int) -> str | None:
-    if not os.path.isdir(state_dir):
-        return None
-    vs = [
-        int(d[2:])
-        for d in os.listdir(state_dir)
-        if d.startswith("v=") and d[2:].isdigit() and int(d[2:]) < version
-    ]
-    if not vs:
-        return None
-    return os.path.join(state_dir, f"v={max(vs)}")
 
 
 def init_state(base: DataFrame, state_dir: str) -> None:

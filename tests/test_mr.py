@@ -190,6 +190,32 @@ def test_mapper_hooks_enable_in_mapper_combining(spark):
     assert got == {"a": 3, "b": 2, "c": 3}
 
 
+def test_mrjob_combiner_runs_when_defined(spark):
+    """A ported mrjob-style job's ``combiner`` runs because the
+    subclass defines it — no opt-in flag. The combiner counts its
+    calls through ``mr.Counters``; the answer is the plain
+    wordcount either way."""
+    counters = mr.Counters(spark)
+
+    class WordCount(mr.MRJob):
+        def mapper(self, _, text):
+            for tok in text.split():
+                yield (tok, 1)
+
+        def combiner(self, word, counts):
+            counters.incr("combiner", "calls")
+            yield (word, sum(counts))
+
+        def reducer(self, word, counts):
+            yield (word, sum(counts))
+
+    rows = [(None, "a b a"), (None, "b c"), (None, "a c c")]
+    got = dict(mr.run_mrjob(spark, WordCount(), rows).collect())
+    assert got == {"a": 3, "b": 2, "c": 3}
+    # at least one call per distinct word (a, b, c)
+    assert counters.value.get(("combiner", "calls"), 0) >= 3
+
+
 def test_run_mrjob_rejects_unknown_options(spark):
     import pytest
 

@@ -148,8 +148,8 @@ EVENTS_ONLY = _sweep(frozenset({"events"}))
 EMBEDDINGS_ONLY = _sweep(frozenset({"embeddings"}))
 
 
-def _dup_triple_vec():
-    """The duplicate-id triple's payload: dyadic floats (exact in
+def _dup_group_vec():
+    """The duplicate-id group's payload: dyadic floats (exact in
     float32), positive everywhere (same sign-LSH bucket as vec 1),
     but deliberately NOT vec 1's vector — see the fixture comment."""
     import numpy as np
@@ -163,7 +163,7 @@ def _dup_triple_vec():
 def adversarial_events_embeddings(tmp_path_factory):
     import numpy as np
 
-    _DUP_TRIPLE_VEC = _dup_triple_vec()
+    _DUP_GROUP_VEC = _dup_group_vec()
 
     d = tmp_path_factory.mktemp("nullsweep_ee")
     ev = pd.DataFrame(
@@ -218,35 +218,39 @@ def adversarial_events_embeddings(tmp_path_factory):
     ev.to_parquet(d / "events.parquet", index=False)
     emb = pd.DataFrame(
         {
-            # vec_id 5 appears THREE times with identical embeddings
-            # (ADVICE r8): a kernel that excludes only ONE same-id
-            # candidate (the old order[0]/order[1] fallback) still
-            # picks a same-id neighbor when 3+ rows share an id in a
-            # bucket, while every oracle excludes ALL a.vec_id <>
-            # b.vec_id pairs — the triple makes that divergence
-            # visible; the fixed kernels mask every ids == ids[i]
-            # entry to -inf before ranking. The triple's payload is
-            # identical WITHIN the triple (any pick among duplicates
-            # yields the same row — engine-deterministic) but NOT
-            # equal to vec 1's: its self-cosine (1.0) strictly
-            # exceeds its best different-id cosine, so an unmasked
-            # kernel ranks a same-id row first instead of hiding
-            # behind the lowest-id tie-break (the first version of
-            # this fixture reused vec 1's exact payload and the
-            # mask-drop mutation survived the tie — mutation-checked).
+            # vec_id 5 appears _K + 1 = FOUR times with identical
+            # embeddings. A kernel that excludes only some same-id
+            # candidates picks a same-id neighbor, or none at all,
+            # while every oracle excludes ALL a.vec_id <> b.vec_id
+            # pairs: 3 rows catch a one-step self fallback in a
+            # top-1 kernel, and the 4th catches a top-K cut that
+            # reserves only ONE slot for self (its K + 1 candidates
+            # are all same-id, so sim_knn, the recall audits and
+            # graph_knn_triangles get no neighbor for id 5). The
+            # shared kernel masks every ids == ids[i] entry to -inf
+            # before ranking. The payload is identical WITHIN the
+            # group (any pick among duplicates yields the same row —
+            # engine-deterministic) but NOT equal to vec 1's: its
+            # self-cosine (1.0) strictly exceeds its best different-id
+            # cosine, so an unmasked kernel ranks a same-id row first
+            # instead of hiding behind the lowest-id tie-break (the
+            # first version of this fixture reused vec 1's exact
+            # payload and the mask-drop mutation survived the tie —
+            # mutation-checked).
             # Same positive sign bits as vec 1 ⇒ same LSH bucket.
-            "vec_id": [0, 1, 2, 3, 4, 5, 5, 5],
+            "vec_id": [0, 1, 2, 3, 4, 5, 5, 5, 5],
             "embedding": [
                 np.zeros(64, np.float32),           # zero norm
                 np.ones(64, np.float32) / 8.0,
                 None,                               # NULL embedding
                 np.ones(3, np.float32),             # wrong length
                 -np.ones(64, np.float32) / 8.0,
-                _DUP_TRIPLE_VEC,                    # dup id ×3
-                _DUP_TRIPLE_VEC,
-                _DUP_TRIPLE_VEC,
+                _DUP_GROUP_VEC,                     # dup id ×4
+                _DUP_GROUP_VEC,
+                _DUP_GROUP_VEC,
+                _DUP_GROUP_VEC,
             ],
-            "label": [0, 1, None, 2, 1, 3, 3, 3],
+            "label": [0, 1, None, 2, 1, 3, 3, 3, 3],
         }
     )
     emb.to_parquet(d / "embeddings.parquet", index=False)

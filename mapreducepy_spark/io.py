@@ -42,10 +42,11 @@ TABLES = (
 # SparkSession), so relying on session.py's builder configs is not
 # enough — round 1 lost 13 correctness rows to exactly that gap:
 #
-# - ``nanosAsLong``: events.ts is parquet TIMESTAMP(NANOS); without
-#   the conf the scan throws PARQUET_TYPE_ILLEGAL before any repair
-#   code can run. Spark has no ns TimestampType, so read as int64 and
-#   rebuild a µs timestamp below.
+# - ``nanosAsLong``: the shipped events.ts is timestamp[us], but a
+#   fixture written with parquet TIMESTAMP(NANOS) would make the scan
+#   throw PARQUET_TYPE_ILLEGAL before any repair code can run. Spark
+#   has no ns TimestampType, so read as int64 and rebuild a µs
+#   timestamp below.
 # - ``inferTimestampNTZ.enabled=false``: Spark 4 defaults to reading
 #   unannotated/isAdjustedToUTC=false parquet timestamps as
 #   TIMESTAMP_NTZ, where instant functions (``unix_micros`` …)
@@ -88,12 +89,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_session_confs(spark)
     df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    # events.ts is parquet TIMESTAMP(NANOS): with nanosAsLong Spark
-    # reads it as long — rebuild the µs-precision timestamp with
-    # integer division (fixture values are µs-aligned, so this is
-    # lossless; `div` avoids double-precision loss on int64). If a
-    # future reader hands us a timestamp directly, normalize the type
-    # instead of dividing.
+    # A TIMESTAMP(NANOS) events.ts reads as long under nanosAsLong —
+    # rebuild the µs-precision timestamp with integer division
+    # (µs-aligned values make this lossless; `div` avoids
+    # double-precision loss on int64). A timestamp column (the shipped
+    # timestamp[us] fixtures) is normalized instead of divided.
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):

@@ -219,15 +219,6 @@ FROM reach
 GROUP BY doc_id
 """
 
-_MAX_CC_ITERS = 25
-
-# Above this many candidate edges the union-find moves off the driver
-# into the distributed propagation loop. LSH banding shrinks the edge
-# list by orders of magnitude relative to the corpus (0.015% of the
-# pair space on the fixtures), so even a 100 TB corpus usually lands
-# under this; the distributed path exists for when it doesn't.
-_DRIVER_CC_MAX_EDGES = 2_000_000
-
 
 @register("dedup_clusters", _ORACLE_DEDUP_CLUSTERS, tags=("llm", "dedup", "graph"))
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,15 +227,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     step that turns PAIRS into dedup GROUPS (keep cluster_id, drop
     the rest).
 
-    Hybrid execution. The candidate EDGE list is tiny relative to the
-    corpus (that is the whole point of LSH banding), so below
-    ``_DRIVER_CC_MAX_EDGES`` the components are solved with a
-    path-compressed union-find on the driver — one collect of the
-    edges, microseconds of CPU. Above it, distributed min-label
-    propagation takes over (``_cc_distributed``): converges in
-    O(graph diameter) rounds (near-dup clusters are shallow), one
-    shuffle join per round. Both paths produce the identical
-    fixpoint; a test pins them equal.
+    The candidate EDGE list is tiny relative to the corpus (that is
+    the whole point of LSH banding), so the components are solved
+    with a path-compressed union-find on the driver: one collect of
+    the edges, one Spark job, one round (``_connected_components``).
 
     Non-SQL-expressible in one shot, but DuckDB's recursive CTE
     computes the identical fixpoint, so this stays hash-checkable.
@@ -253,23 +239,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _connected_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    """Hybrid CC over a (doc_a, doc_b) edge list — driver union-find
-    under ``_DRIVER_CC_MAX_EDGES``, distributed min-label propagation
-    above; shared by ``dedup_clusters`` (LSH candidates) and
+    """Connected components of a (doc_a, doc_b) edge list, shared by
+    ``dedup_clusters`` (LSH candidates) and
     ``dedup_survivors_verified`` (exact-Jaccard-verified edges).
 
-    One bounded collect decides the path and, under the limit, is
-    the union-find's input, so a small graph costs one Spark job."""
-    pdf = pairs.limit(_DRIVER_CC_MAX_EDGES + 1).toPandas()
-    if len(pdf) <= _DRIVER_CC_MAX_EDGES:
-        return _cc_driver(spark, pdf)
-    return _cc_distributed(spark, pairs.localCheckpoint())
-
-
-def _cc_driver(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
-    """Union-find with path compression + union-by-size over a pandas
-    (doc_a, doc_b) edge list; cluster_id = min member, matching the
-    propagation fixpoint exactly."""
+    One collect of the edges feeds a union-find with path compression
+    and union-by-size; cluster_id = min member of the component."""
+    pdf = pairs.toPandas()
     parent: dict[int, int] = {}
     size: dict[int, int] = {}
 
@@ -299,69 +275,6 @@ def _cc_driver(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
         }
     )
     return spark.createDataFrame(out, "doc_id bigint, cluster_id bigint")
-
-
-def _cc_distributed(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    # Iterative-algorithm hygiene: localCheckpoint truncates lineage,
-    # so round N's plan never re-derives the whole LSH pipeline or
-    # N−1 previous joins — without it, per-round planning + recompute
-    # grows without bound (measured 19 s/round at sf0.1; 0.5 s with).
-    # Partitioning is sized to the GRAPH, not inherited from the
-    # parent shuffle: ~1M edges per partition, so a 32-task shuffle
-    # never pushes an 849-node graph through 3 rounds × 32 tasks.
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .localCheckpoint()
-    )
-    n_parts = max(1, edges.count() // 1_000_000)
-    edges = edges.repartition(n_parts, "dst").localCheckpoint()
-    labels = (
-        edges.select(F.col("src").alias("doc_id")).distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .repartition(n_parts, "doc_id")
-        .localCheckpoint()
-    )
-    prev_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-    converged = False
-    for _ in range(_MAX_CC_ITERS):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        labels = (
-            labels.join(nbr_min, labels.doc_id == nbr_min.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        new_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    if not converged:
-        # Min-label propagation needs ~graph-diameter rounds; a graph
-        # deeper than the cap would silently return labels that split
-        # one component into several. Fail loudly instead — the caller
-        # can raise _MAX_CC_ITERS or pre-contract the graph.
-        raise RuntimeError(
-            f"connected components did not converge within "
-            f"{_MAX_CC_ITERS} rounds (label sum still changing); "
-            f"graph diameter likely exceeds the iteration cap"
-        )
-    return labels.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("cluster_id").cast("bigint").alias("cluster_id"),
-    )
 
 
 # --- SimHash -------------------------------------------------------
@@ -527,8 +440,8 @@ def _candidate_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed connected-components labels (doc_id → cluster_id):
-    the union-find/propagation runs once per (session, fixture) and is
-    shared by ``dedup_clusters``, ``dedup_cluster_histogram`` and
+    the union-find runs once per (session, fixture) and is shared by
+    ``dedup_clusters``, ``dedup_cluster_histogram`` and
     ``split_by_cluster`` — the CC fixpoint is the funnel's most
     expensive per-consumer recompute after the pairs themselves."""
     return _funnel_cached(
@@ -1339,8 +1252,8 @@ def dedup_survivors_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the verification funnel bounds the exact-Jaccard work to
     the LSH candidate set (dedup_near_verified argument); the CC runs
-    over verified EDGES (strictly fewer than candidates — hybrid
-    driver/distributed, `_connected_components`); the final
+    over verified EDGES (strictly fewer than candidates; one driver
+    union-find, `_connected_components`); the final
     materialization is an anti-join of the drop list against the
     corpus, planned from the drop list's size: under the broadcast
     threshold it is a broadcast and the corpus never shuffles to
@@ -1352,12 +1265,9 @@ def dedup_survivors_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
     )
     cc = _connected_components(spark, verified)
-    # The planner sizes the drop list itself. The driver path's
+    # The planner sizes the drop list itself: the union-find's
     # relation carries its exact size, so a small drop list is
-    # broadcast from the start. The distributed path's checkpoint
-    # carries only the estimate of the loop's joins, so the plan starts
-    # as a sort-merge join and AQE turns it into a broadcast from the
-    # runtime size, after the corpus side has been shuffled.
+    # broadcast from the start.
     drops = cc.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     docs = load(spark, sf_dir, "documents")
     return docs.join(drops, "doc_id", "left_anti").select(
@@ -1619,8 +1529,8 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs manual inspection), plus the singleton line (docs in no
     candidate pair at all, the corpus's unique mass).
 
-    Scale: rides the cached candidate pairs + the hybrid CC (one
-    shuffle each); the histogram itself is two map-side-combining
+    Scale: rides the cached candidate pairs + the driver CC (one
+    shuffle, one collect); the histogram itself is two map-side-combining
     aggregations over |docs-in-clusters| rows, then a 2-scalar
     cross join for the singleton row — no corpus-sized shuffle
     beyond what the funnel already paid. CC clusters are ≥2 docs by
@@ -1710,7 +1620,7 @@ def split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pair — spans two splits (no flag column needed; there is
     nothing data-dependent to certify).
 
-    Scale: rides the session-cached candidate pairs + hybrid CC
+    Scale: rides the session-cached candidate pairs + driver CC
     (``_clusters_cached``) — zero marginal funnel cost after any
     other cluster consumer; the assignment itself is a broadcast-able
     doc_id→cluster join (cluster labels are pair-graph-sized, orders

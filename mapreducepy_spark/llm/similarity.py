@@ -735,8 +735,8 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Centroid "training" is deterministic for oracle parity: the
 # _N_CELLS lowest-id vectors, unit-normalized. Production would run
 # a few Lloyd iterations (mapInPandas assign + groupBy mean per
-# round — same dataflow as dedup_clusters' loop) and probe several
-# cells; neither changes the join shape below.
+# round) and probe several cells; neither changes the join shape
+# below.
 
 _N_CELLS = 16
 

@@ -21,10 +21,10 @@ Execution mapping (SURVEY.md §1.2):
   order (``sort_values_by=``), never materializing a per-key list
 - counters       → :class:`Counters` over a dict-merging accumulator
 - multi-step     → ``MRJob.steps()`` returning :class:`MRStep` list
-  (per-step mapper/combiner/reducer + shuffle options; a
-  reducer-less step is MAP-ONLY and plans no shuffle); the chained
-  steps stay one lazy RDD lineage — no driver round-trip between
-  passes
+  (per-step mapper/combiner/reducer + shuffle options; a step with
+  no reducer and no associative_reduce is MAP-ONLY and plans no
+  shuffle); the chained steps stay one lazy RDD lineage — no driver
+  round-trip between passes
 
 This is the engine's ONE deliberate RDD surface: arbitrary Python
 objects as keys/values are exactly what DataFrames can't type. Jobs
@@ -36,8 +36,8 @@ Scale: ``groupByKey`` materializes each key's values on one executor
 — correct for the MR contract (reducer sees the full value iterator),
 and the combiner keeps shuffle volume down, but a reducer that is
 actually an aggregation should graduate to ``reduceByKey`` via
-``run_job(..., associative_reduce=fn)`` or to a DataFrame groupBy.
-For small jobs, per-task overhead dominates, not shuffle volume:
+``run_job(..., None, associative_reduce=fn)`` or to a DataFrame
+groupBy. For small jobs, per-task overhead dominates, not shuffle volume:
 every map and reduce task is a Python worker round-trip. On a 4-core
 VM the five MR jobs of the benchmark's batch pass waited 2.8 s of
 their 3.1 s on Python workers under PySpark's stock daemon, and 0.65
@@ -104,9 +104,10 @@ class MRStep:
     counts as ONE job class). Any subset of the three phases:
 
     - ``mapper=None`` — identity map (pairs pass through unchanged);
-    - ``reducer=None`` — a MAP-ONLY step: no shuffle is planned at
-      all, the mapped pairs flow straight into the next step (the
-      real MR map-only-job semantics, not an identity reduce);
+    - ``reducer`` or ``associative_reduce`` — the step's reduce; with
+      neither it is a MAP-ONLY step: no shuffle is planned at all,
+      the mapped pairs flow straight into the next step (the real MR
+      map-only-job semantics, not an identity reduce);
     - ``combiner`` — optional per-partition local combine.
 
     Per-step shuffle options (``num_partitions``,
@@ -127,15 +128,15 @@ class MRStep:
         associative_reduce: Callable[[Any, Any], Any] | None = None,
         sort_values_by: Callable[[Any], Any] | None = None,
     ):
-        if reducer is None and (
-            combiner is not None
-            or associative_reduce is not None
-            or sort_values_by is not None
+        if (
+            reducer is None
+            and associative_reduce is None
+            and (combiner is not None or sort_values_by is not None)
         ):
             raise TypeError(
-                "MRStep: a map-only step (reducer=None) plans no "
-                "shuffle, so combiner/associative_reduce/"
-                "sort_values_by cannot apply"
+                "MRStep: a map-only step (no reducer, no "
+                "associative_reduce) plans no shuffle, so "
+                "combiner/sort_values_by cannot apply"
             )
         self.mapper = mapper
         self.combiner = combiner
@@ -319,7 +320,7 @@ def _input_rdd(spark, records, num_partitions):
 
 def _shuffle_reduce(
     mapped,
-    reducer: Reducer,
+    reducer: Reducer | None,
     combiner,
     num_partitions: int | None,
     associative_reduce,
@@ -331,6 +332,12 @@ def _shuffle_reduce(
                 "associative_reduce and sort_values_by are mutually "
                 "exclusive: an associative fold is order-free by "
                 "definition, so a sorted-values contract cannot apply"
+            )
+        if reducer is not None or combiner is not None:
+            raise TypeError(
+                "associative_reduce replaces the reducer and the "
+                "combiner (reduceByKey folds map-side and reduce-side "
+                "with the one function), so neither would run"
             )
         return mapped.reduceByKey(associative_reduce, numPartitions=num_partitions)
     if combiner is not None:
@@ -381,7 +388,7 @@ def run_job(
     spark: SparkSession,
     records: Iterable[KV] | "DataFrame",
     mapper: Mapper,
-    reducer: Reducer,
+    reducer: Reducer | None,
     combiner: Callable[[Any, Iterable[Any]], Iterable[KV]] | None = None,
     num_partitions: int | None = None,
     associative_reduce: Callable[[Any, Any], Any] | None = None,
@@ -396,7 +403,8 @@ def run_job(
     ``associative_reduce``: fast path — when the reduction is an
     associative binary op, uses ``reduceByKey`` (map-side partial
     merge, shuffle carries one value per key per partition) instead
-    of ``groupByKey``.
+    of ``groupByKey``. It takes the place of ``reducer`` (pass
+    ``None``) and ``combiner``; passing either with it raises.
 
     ``sort_values_by``: secondary sort — the reducer's value iterator
     arrives ordered by this key function, streamed (never
@@ -433,8 +441,9 @@ def _run_step(spark: SparkSession, step: MRStep, records):
     repartition point, so it would be silently ignored — that case
     raises instead (round-8 review: the constructor-time rejection
     over-reached and broke the legitimate first-step use)."""
+    map_only = step.reducer is None and step.associative_reduce is None
     if (
-        step.reducer is None
+        map_only
         and step.num_partitions is not None
         and (hasattr(records, "flatMap") or isinstance(records, DataFrame))
     ):
@@ -449,8 +458,8 @@ def _run_step(spark: SparkSession, step: MRStep, records):
     if step.mapper is not None:
         mapper = step.mapper
         rdd = rdd.flatMap(lambda kv: mapper(kv[0], kv[1]))
-    if step.reducer is None:
-        return rdd  # map-only: no shuffle planned
+    if map_only:
+        return rdd  # no shuffle planned
     return _shuffle_reduce(
         rdd,
         step.reducer,
@@ -506,7 +515,6 @@ def run_mrjob(
     records,
     *,
     num_partitions: int | None = None,
-    associative_reduce: Callable[[Any, Any], Any] | None = None,
     sort_values_by: Callable[[Any], Any] | None = None,
 ):
     """Run a subclass-style :class:`MRJob`. ``mapper_init`` /
@@ -519,8 +527,7 @@ def run_mrjob(
     loudly instead of silently never running)."""
     steps = job.steps()
     if steps is not None:
-        options = (num_partitions, associative_reduce, sort_values_by)
-        if any(o is not None for o in options):
+        if num_partitions is not None or sort_values_by is not None:
             raise TypeError(
                 "run_mrjob: a multi-step job carries its options on "
                 "each MRStep; per-run options would silently apply "
@@ -540,7 +547,7 @@ def run_mrjob(
         job.reducer,
         getattr(job, "combiner", None),
         num_partitions,
-        associative_reduce,
+        None,
         sort_values_by,
     )
 

@@ -180,7 +180,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     never rides a shuffle after the initial distinct. At a scale
     where ranks outgrow a broadcast, the same loop runs as a
     co-partitioned sort-merge join on ``node`` with both sides
-    pre-bucketed (plans/bucketing.py); the algebra is unchanged.
+    pre-bucketed (the ``bucketBy`` tables of warehouse.py); the
+    algebra is unchanged.
 
     Every node of the symmetric bipartite graph has an out-edge and
     an in-edge by construction, so there is no dangling-mass term
@@ -523,10 +524,8 @@ def graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     BROADCAST frontier (frontier is node-sized) plus a distinct and
     an anti-join against the visited set — the standard distributed
     BFS step; the edge list rides from the shared
-    ``_shipment_edges`` expression (pinned once). Unbounded-depth
-    BFS is the ``dedup_clusters`` loop (localCheckpoint per round,
-    loud non-convergence cap); the fixed-depth unroll here stays one
-    Catalyst plan.
+    ``_shipment_edges`` expression (pinned once). The fixed-depth
+    unroll stays one Catalyst plan.
 
     Determinism: frontier sets are exact; NOT-IN is safe because
     node ids are never NULL by construction (packed from non-null
@@ -535,9 +534,8 @@ def graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _shipment_edges_cached(spark, sf_dir)
     # each frontier feeds MULTIPLE consumers (the next hop's probe +
     # its own census + later anti-joins) — pin the node-sized sets
-    # once or their subtrees re-execute per consumer (the
-    # dedup_clusters per-round checkpoint rule; measured 1.9 s → 1.5
-    # s min-of-5 at sf0.1)
+    # once or their subtrees re-execute per consumer (measured
+    # 1.9 s → 1.5 s min-of-5 at sf0.1)
     l0 = (
         edges.select("src")
         .filter(

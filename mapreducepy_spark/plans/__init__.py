@@ -2,7 +2,6 @@
 as data, so scale properties are assertable in tests) and plan-shape
 rewrites Spark does not do automatically (skew salting)."""
 
-from .bucketing import read_bucketed, write_bucketed  # noqa: F401
 from .inspect import (  # noqa: F401
     executed_plan,
     plan_text,

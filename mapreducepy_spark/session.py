@@ -76,6 +76,9 @@ def get_spark(
         # (static mode would wipe the whole table)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
+        # no `[Stage N:...]\r` bars on stderr: they would share a line
+        # with the bench rows and parity lines that scripts print there
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.python.daemon.module", "mapreducepy_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _ENGINE_PARENT)
         .config("spark.driver.memory", "8g")

@@ -2,8 +2,9 @@
 session at sf0.001.
 
 ``bench.sweep`` must count a raising key as one failure and go on
-timing the rest; ``make_multifile_fixture.materialize`` must replicate
-the shifted tables with unique keys and copy the others unchanged.
+timing the rest, with no console progress bar between its stderr
+rows; ``make_multifile_fixture.materialize`` must replicate the
+shifted tables with unique keys and copy the others unchanged.
 """
 
 from __future__ import annotations
@@ -70,6 +71,14 @@ def fixture_script():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+def test_session_prints_no_console_progress_bar(spark):
+    """``get_spark`` turns Spark's console progress bar off, so a
+    ``[Stage N:...]`` bar never shares a stderr line with a bench
+    row and ``bench.py 2>&1 | grep '^bench'`` finds every row."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.ui.showConsoleProgress") == "false"
 
 
 def test_replicated_fixture_shifts_keys_and_copies_dims(

@@ -8,15 +8,17 @@ from __future__ import annotations
 import pytest
 
 from mapreducepy_spark.io import load
-from mapreducepy_spark.plans import plan_text, read_bucketed, write_bucketed
+from mapreducepy_spark.plans import plan_text
 
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark, sf_dir):
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-    write_bucketed(o, "orders_b", ["o_custkey"], 4)
-    write_bucketed(c, "customer_b", ["c_custkey"], 4)
+    # bucketBy needs a managed table: the bucket metadata lives in
+    # the catalog, not in the directory layout
+    for df, key, table in ((o, "o_custkey", "orders_b"), (c, "c_custkey", "customer_b")):
+        df.write.format("parquet").mode("overwrite").bucketBy(4, key).saveAsTable(table)
     yield ("orders_b", "customer_b")
     for t in ("orders_b", "customer_b"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -27,8 +29,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, bucketed_tables):
     the join must consume the bucket layout directly — zero Exchange
     nodes anywhere in the plan."""
     ot, ct = bucketed_tables
-    o = read_bucketed(spark, ot)
-    c = read_bucketed(spark, ct)
+    o = spark.table(ot)
+    c = spark.table(ct)
     # disable broadcast so the plan must choose a shuffle-family join
     # — that is the strategy whose Exchange the bucketing elides
     with _no_broadcast(spark):
@@ -43,7 +45,7 @@ def test_bucketed_groupby_skips_shuffle(spark, sf_dir, bucketed_tables):
     """An aggregation keyed on the bucket column reuses the bucket
     layout: no Exchange between scan and final aggregate."""
     ot, _ = bucketed_tables
-    o = read_bucketed(spark, ot)
+    o = spark.table(ot)
     agg = o.groupBy("o_custkey").count()
     plan = plan_text(agg, "simple")
     assert "Exchange" not in plan

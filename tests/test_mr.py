@@ -69,6 +69,50 @@ def test_associative_reduce_fast_path(spark):
     assert got == want
 
 
+def test_associative_reduce_with_reducer_or_combiner_raises(spark):
+    """reduceByKey folds with the one function, so a reducer or a
+    combiner passed beside ``associative_reduce`` would never run;
+    the job raises instead of dropping them."""
+    from operator import add
+
+    import pytest
+
+    records = [(None, i) for i in range(10)]
+
+    def mapper(_, v):
+        yield (v % 2, v)
+
+    def summed(k, vs):
+        yield (k, sum(vs))
+
+    with pytest.raises(TypeError, match="replaces the reducer"):
+        mr.run_job(spark, records, mapper, summed, associative_reduce=add)
+    with pytest.raises(TypeError, match="replaces the reducer"):
+        mr.run_job(
+            spark, records, mapper, None, combiner=summed, associative_reduce=add
+        )
+
+
+def test_step_with_only_associative_reduce_folds(spark):
+    """An MRStep reduces when it has a reducer OR an
+    ``associative_reduce``: a fold-only step is a reduce step, not a
+    map-only one, and plans its one shuffle."""
+
+    class FoldWordCount(mr.MRJob):
+        def steps(self):
+            return [
+                mr.MRStep(
+                    mapper=lambda _, line: [(w, 1) for w in line.split()],
+                    associative_reduce=lambda a, b: a + b,
+                ),
+            ]
+
+    rows = [(None, "foo bar foo"), (None, "bar foo")]
+    out = mr.run_mrjob(spark, FoldWordCount(), rows)
+    assert dict(out.collect()) == {"foo": 3, "bar": 2}
+    assert out.toDebugString().decode().count("ShuffledRDD") == 1
+
+
 def test_mrjob_pipeline_chains(spark, sf_dir):
     """Two chained jobs: wordcount, then count-of-counts (the classic
     MR chaining example)."""

@@ -35,17 +35,29 @@ def test_entry_smoke(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
-def test_cc_driver_and_distributed_agree(spark, sf_dir):
-    """The driver union-find fast path and the distributed min-label
-    propagation must produce the identical fixpoint."""
+def test_connected_components_of_2_5m_edge_cliques(spark):
+    """``_connected_components`` on a graph past any fixture's size:
+    2,500,008 edges forming 89,286 disjoint 8-node cliques, nodes
+    8g..8g+7 in clique g. Every node lands in its clique's cluster,
+    labelled by its min member 8g, so the totals have closed forms."""
+    from pyspark.sql import functions as F
+
     from mapreducepy_spark.llm import dedup as dd
 
-    pairs = dd._candidate_pairs(spark, sf_dir).localCheckpoint()
-    a = dd._cc_driver(spark, pairs.toPandas()).toPandas()
-    b = dd._cc_distributed(spark, pairs).toPandas()
-    from .parity_util import canon_frame
-
-    assert canon_frame(a) == canon_frame(b)
+    cliques = 89_286
+    ids = spark.range(cliques * 64)
+    g, i, j = F.expr("id div 64"), F.expr("(id div 8) % 8"), F.col("id") % 8
+    pairs = ids.filter(i < j).select(
+        (g * 8 + i).alias("doc_a"), (g * 8 + j).alias("doc_b")
+    )
+    cc = dd._connected_components(spark, pairs)
+    nodes, clusters, label_sum = cc.agg(
+        F.count("*"), F.countDistinct("cluster_id"), F.sum("cluster_id")
+    ).first()
+    assert nodes == 8 * cliques
+    assert clusters == cliques
+    # sum over cliques of 8 members × label 8g
+    assert label_sum == 64 * cliques * (cliques - 1) // 2
 
 
 def test_sampling_deterministic_per_seed(spark, sf_dir):

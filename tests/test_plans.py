@@ -505,11 +505,10 @@ def test_survivors_verified_drop_list_broadcasts(spark, sf_dir):
 def test_survivors_verified_build_counts_no_drop_list(spark, sf_dir):
     """Building dedup_survivors_verified with its session-cache
     artifacts warm runs only the connected components' one job (the
-    bounded edge collect that both picks the driver path and feeds
-    its union-find): the planner picks the anti-join strategy, so no
-    action counts the drop list first (that count was 2 more jobs
-    under AQE). Jobs are counted per job group, as ``bench.sweep``
-    counts them."""
+    collect of the verified edges that feeds the union-find): the
+    planner picks the anti-join strategy, so no action counts the
+    drop list first (that count was 2 more jobs under AQE). Jobs are
+    counted per job group, as ``bench.sweep`` counts them."""
     from perfbench import harness
 
     build = CATALOG["dedup_survivors_verified"].builder
@@ -519,20 +518,6 @@ def test_survivors_verified_build_counts_no_drop_list(spark, sf_dir):
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) == 1, f"{len(jobs)} jobs"
-
-
-def test_survivors_verified_distributed_cc_still_broadcasts(spark, sf_dir, monkeypatch):
-    """With the components solved by distributed propagation, the drop
-    list carries no exact size, and AQE still replans the anti-join
-    into a broadcast from its runtime size."""
-    import mapreducepy_spark.llm.dedup as dd
-
-    monkeypatch.setattr(dd, "_DRIVER_CC_MAX_EDGES", -1)
-    df = CATALOG["dedup_survivors_verified"].builder(spark, sf_dir)
-    df.collect()
-    final = executed_plan(df).split("== Initial Plan ==")[0]
-    assert "BroadcastHashJoin" in final and "LeftAnti" in final
-    assert "SortMergeJoin" not in final
 
 
 def test_cooccurrence_singles_broadcast_onto_pairs(spark, sf_dir):

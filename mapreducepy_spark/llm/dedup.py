@@ -104,6 +104,29 @@ cand_pairs AS (
 )"""
 
 
+def _duck_cc_ctes(pairs: str) -> str:
+    """Connected components of the pair CTE ``pairs`` (columns
+    ``doc_a``, ``doc_b``) as the CTE ``cc(doc_id, cluster_id)``, the
+    min doc_id of each doc's component; follows a ``WITH RECURSIVE``
+    chain that defines ``pairs``. ``edges`` and ``cc`` are
+    MATERIALIZED: DuckDB inlines a CTE at each reference, so an
+    inlined ``edges`` re-evaluates the pair CTE at every recursion
+    step and an inlined ``cc`` re-runs the recursion per reference."""
+    return f"""edges AS MATERIALIZED (
+    SELECT doc_a AS src, doc_b AS dst FROM {pairs}
+    UNION ALL
+    SELECT doc_b AS src, doc_a AS dst FROM {pairs}
+),
+reach(doc_id, label) AS (
+    SELECT src, src FROM edges
+    UNION
+    SELECT e.src, r.label FROM edges e JOIN reach r ON r.doc_id = e.dst
+),
+cc AS MATERIALIZED (
+    SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
+)"""
+
+
 def _duck_minhash_lsh() -> str:
     return f"""
 WITH {_duck_lsh_ctes()}
@@ -203,20 +226,10 @@ def _candidate_pairs(
 
 _ORACLE_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE {_duck_lsh_ctes()},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM cand_pairs
-    UNION ALL
-    SELECT doc_b AS src, doc_a AS dst FROM cand_pairs
-),
-reach(doc_id, label) AS (
-    SELECT src, src FROM edges
-    UNION
-    SELECT e.src, r.label FROM edges e JOIN reach r ON r.doc_id = e.dst
-)
+{_duck_cc_ctes("cand_pairs")}
 SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       CAST(MIN(label) AS BIGINT) AS cluster_id
-FROM reach
-GROUP BY doc_id
+       CAST(cluster_id AS BIGINT) AS cluster_id
+FROM cc
 """
 
 
@@ -1216,20 +1229,9 @@ vpairs AS (
           / (sa.n_shingles + sb.n_shingles - i.n_common)
           >= {_JACCARD_THRESHOLD}
 ),
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM vpairs
-    UNION ALL
-    SELECT doc_b AS src, doc_a AS dst FROM vpairs
-),
-reach(doc_id, label) AS (
-    SELECT src, src FROM edges
-    UNION
-    SELECT e.src, r.label FROM edges e JOIN reach r ON r.doc_id = e.dst
-),
+{_duck_cc_ctes("vpairs")},
 drops AS (
-    SELECT doc_id FROM (
-        SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
-    ) WHERE cluster_id <> doc_id
+    SELECT doc_id FROM cc WHERE cluster_id <> doc_id
 )
 SELECT d.doc_id, d.lang, d.source
 FROM documents d
@@ -1486,21 +1488,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ORACLE_CLUSTER_HISTOGRAM = f"""
 WITH RECURSIVE {_duck_lsh_ctes()},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM cand_pairs
-    UNION ALL
-    SELECT doc_b AS src, doc_a AS dst FROM cand_pairs
-),
-reach(doc_id, label) AS (
-    SELECT src, src FROM edges
-    UNION
-    SELECT e.src, r.label FROM edges e JOIN reach r ON r.doc_id = e.dst
-),
-cc AS MATERIALIZED (
-    -- MATERIALIZED: referenced twice below; DuckDB inlines chained
-    -- CTEs per reference, which on a recursive input is exponential
-    SELECT doc_id, MIN(label) AS cluster_id FROM reach GROUP BY doc_id
-),
+{_duck_cc_ctes("cand_pairs")},
 sizes AS (
     SELECT cluster_id, COUNT(*) AS cluster_size FROM cc GROUP BY cluster_id
 )
@@ -1566,20 +1554,7 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ORACLE_SPLIT_BY_CLUSTER = f"""
 WITH RECURSIVE {_duck_lsh_ctes()},
-edges AS (
-    SELECT doc_a AS src, doc_b AS dst FROM cand_pairs
-    UNION ALL
-    SELECT doc_b AS src, doc_a AS dst FROM cand_pairs
-),
-reach(doc_id, label) AS (
-    SELECT src, src FROM edges
-    UNION
-    SELECT e.src, r.label FROM edges e JOIN reach r ON r.doc_id = e.dst
-),
-cc AS MATERIALIZED (
-    SELECT doc_id, CAST(MIN(label) AS BIGINT) AS cluster_id
-    FROM reach GROUP BY doc_id
-),
+{_duck_cc_ctes("cand_pairs")},
 k AS (
     SELECT d.lang,
            COALESCE(c.cluster_id, d.doc_id) AS rep

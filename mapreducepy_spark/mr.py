@@ -410,13 +410,19 @@ def run_job(
     arrives ordered by this key function, streamed (never
     materialized per key); the shuffle sorts a composite key while
     partitioning on the natural key, the classic Hadoop pattern.
+
+    With neither ``reducer`` nor ``associative_reduce`` the job is
+    MAP-ONLY, the same as an :class:`MRStep` with neither.
     """
-    rdd = _input_rdd(spark, records, num_partitions)
-    mapped = rdd.flatMap(lambda kv: mapper(kv[0], kv[1]))
-    return _shuffle_reduce(
-        mapped, reducer, combiner, num_partitions,
-        associative_reduce, sort_values_by,
+    step = MRStep(
+        mapper,
+        combiner,
+        reducer,
+        num_partitions=num_partitions,
+        associative_reduce=associative_reduce,
+        sort_values_by=sort_values_by,
     )
+    return _run_step(spark, step, records)
 
 
 def _map_partitions_with_hooks(job: MRJob):

@@ -338,13 +338,13 @@ def graph_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ K by construction, wedges ≤ n·C(K,2), and the two triangle
     joins are linear in nodes AT EVERY SCALE (the docstring argument
     for why a co-occurrence projection would be wrong lives in the
-    module docstring). The kNN table itself comes from the proven
-    ``sim_knn`` chunked-broadcast GEMM and is localCheckpoint-ed once
-    — the degree table, the edge-canonicalization and the three
-    triangle-join probes all read the pinned ≤K·n-row table, never
-    re-running the GEMM. The wedge/triangle/cardinality scalars are
-    1-row frames combined with the single allowed broadcast
-    cross-join pattern.
+    module docstring). The kNN table itself is the ``sim_knn``
+    chunked-broadcast GEMM, which ``fixture_cached`` checkpoints once
+    per session — the degree table, the edge-canonicalization and the
+    three triangle-join probes all read that pinned ≤K·n-row table,
+    never re-running the GEMM. The wedge/triangle/cardinality
+    scalars are 1-row frames combined with the single allowed
+    broadcast cross-join pattern.
 
     Triangle enumeration orients each edge a<b, walks e1=(a,b),
     e2=(b,c), and closes with an equi-join on e3=(a,c) — each
@@ -354,9 +354,7 @@ def graph_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..llm.similarity import _valid_embeddings, sim_knn
 
-    knn = sim_knn(spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    ).localCheckpoint()
+    knn = sim_knn(spark, sf_dir).select("query_id", "neighbor_id")
     und = (
         knn.select(
             F.least("query_id", "neighbor_id").alias("a"),

@@ -41,7 +41,10 @@ def ensure_orc_fixture(sf_dir: str) -> str:
     )
 
 
-_ORACLE_ORC_CENSUS = """
+# The census oracle of both the ORC and the Avro twin: each derives
+# its numbers from the parquet original, so a green row certifies the
+# twin's writer and Spark's reader against it.
+ORACLE_DOC_CENSUS = """
 SELECT lang,
        source,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -55,19 +58,11 @@ GROUP BY lang, source
 """
 
 
-@register("orc_census", _ORACLE_ORC_CENSUS, tags=("source", "orc"))
-def orc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read the pyarrow-written ORC corpus with Spark's native ORC
-    reader and census it per (lang, source): doc count, total
+def doc_census(docs: DataFrame) -> DataFrame:
+    """Census a documents twin per (lang, source): doc count, total
     payload characters (recomputed from the stored text, NOT the
     n_chars column), how many rows' stored length agrees with their
-    n_chars metadata, and the doc_id range. The oracle derives the
-    identical numbers from the parquet original — a hash-green row
-    therefore proves the ORC write+read preserved every row, every
-    string byte-length, and both integer columns.
-    """
-    path = ensure_orc_fixture(sf_dir)
-    docs = spark.read.orc(path)
+    n_chars metadata, and the doc_id range."""
     return docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(F.length("text")).cast("bigint").alias("total_chars"),
@@ -79,3 +74,14 @@ def orc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("doc_id").cast("bigint").alias("min_doc_id"),
         F.max("doc_id").cast("bigint").alias("max_doc_id"),
     )
+
+
+@register("orc_census", ORACLE_DOC_CENSUS, tags=("source", "orc"))
+def orc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Read the pyarrow-written ORC corpus with Spark's native ORC
+    reader and census it with :func:`doc_census`. The oracle derives
+    the identical numbers from the parquet original — a hash-green
+    row therefore proves the ORC write+read preserved every row,
+    every string's character length, and both integer columns.
+    """
+    return doc_census(spark.read.orc(ensure_orc_fixture(sf_dir)))

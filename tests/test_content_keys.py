@@ -12,12 +12,13 @@ import pathlib
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import SparkSession
 
 from mapreducepy_spark.operators.scans import (
     ensure_evolved_fixture,
     ensure_partitioned_fixture,
 )
-from mapreducepy_spark.sources.avro_source import ensure_avro_fixture, read_avro_records
+from mapreducepy_spark.sources.avro_source import _AVRO_FORMAT, ensure_avro_fixture
 from mapreducepy_spark.sources.csv_source import ensure_csv_fixture
 from mapreducepy_spark.sources.jsonl import ensure_jsonl_fixture, ensure_jsonl_shapes_fixture
 from mapreducepy_spark.sources.orc_source import ensure_orc_fixture
@@ -48,10 +49,9 @@ def _count_parquet_dir(path: str) -> int:
 
 
 def _count_avro_dir(path: str) -> int:
-    return sum(
-        len(read_avro_records(pathlib.Path(f).read_bytes())[1])
-        for f in _files(path, ".avro")
-    )
+    # the test requests the ``spark`` fixture, so a session is active
+    spark = SparkSession.getActiveSession()
+    return spark.read.format(_AVRO_FORMAT).load(path).count()
 
 
 _BUILDERS = {
@@ -66,7 +66,9 @@ _BUILDERS = {
 
 
 @pytest.mark.parametrize("kind", sorted(_BUILDERS))
-def test_derived_fixture_written_once_per_source_content(sf_dir, tmp_path, monkeypatch, kind):
+def test_derived_fixture_written_once_per_source_content(
+    spark, sf_dir, tmp_path, monkeypatch, kind
+):
     ensure, count_rows = _BUILDERS[kind]
     monkeypatch.setenv("MAPREDUCEPY_SPARK_FIXTURE_DIR", str(tmp_path / "fx"))
     sf = tmp_path / "sf"

@@ -69,6 +69,20 @@ def test_associative_reduce_fast_path(spark):
     assert got == want
 
 
+def test_run_job_without_reduce_is_map_only(spark):
+    """With neither a reducer nor an ``associative_reduce``, run_job
+    is a map-only job, exactly as an MRStep with neither: the mapped
+    pairs are the output and no shuffle is planned."""
+    records = [(None, i) for i in range(20)]
+
+    def mapper(_, v):
+        yield (v % 3, v * 10)
+
+    out = mr.run_job(spark, records, mapper, None)
+    assert sorted(out.collect()) == sorted((i % 3, i * 10) for i in range(20))
+    assert "ShuffledRDD" not in out.toDebugString().decode()
+
+
 def test_associative_reduce_with_reducer_or_combiner_raises(spark):
     """reduceByKey folds with the one function, so a reducer or a
     combiner passed beside ``associative_reduce`` would never run;

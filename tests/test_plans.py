@@ -1177,8 +1177,11 @@ def test_agg_mad_is_single_exchange_window_plan(spark, sf_dir):
 
 
 def test_avro_census_decode_is_single_pass(spark, sf_dir):
+    """Spark's Avro reader feeds the census aggregate directly: one
+    Avro FileScan, no Python decode node, no join."""
     plan = plan_of(spark, "avro_census", sf_dir, mode="simple")
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("FileScan avro") == 1
+    assert "Python" not in plan and "InPandas" not in plan
     assert "Join" not in plan
 
 

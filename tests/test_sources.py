@@ -6,17 +6,23 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreducepy_spark.io import load
-from mapreducepy_spark.sources import formats as fmt
 
 from .parity_util import canon_frame
 
 
 def _roundtrip(spark, df, path, format_):
-    fmt.write_table(df, path, fmt=format_)
-    back = fmt.read_table(spark, path, fmt=format_, schema=df.schema)
+    # "header" is a CSV option; the other formats ignore it
+    df.write.format(format_).option("header", "true").save(path)
+    back = (
+        spark.read.format(format_)
+        .option("header", "true")
+        .schema(df.schema)
+        .load(path)
+    )
     assert canon_frame(back.toPandas()) == canon_frame(df.toPandas())
 
 
@@ -42,9 +48,9 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
         "order_year", F.year("o_orderdate")
     )
     path = str(tmp_path / "orders_by_year")
-    fmt.write_table(df, path, partition_by=["order_year"])
+    df.write.partitionBy("order_year").parquet(path)
 
-    back = fmt.read_table(spark, path).filter(F.col("order_year") == 1997)
+    back = spark.read.parquet(path).filter(F.col("order_year") == 1997)
     buf = io.StringIO()
     with redirect_stdout(buf):
         back.explain("formatted")
@@ -54,15 +60,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert "order_year" in [l for l in plan.splitlines() if "PartitionFilters" in l][0]
     want = df.filter(F.col("order_year") == 1997).count()
     assert back.count() == want
-
-
-def test_repartition_for_output_sizes_files(spark, sf_dir, tmp_path):
-    df = load(spark, sf_dir, "lineitem")
-    sized = fmt.repartition_for_output(df, target_file_bytes=64 * 1024, est_row_bytes=100)
-    path = tmp_path / "li_sized"
-    fmt.write_table(sized, str(path))
-    files = [p for p in path.glob("*.parquet")]
-    assert len(files) == sized.rdd.getNumPartitions()
 
 
 def test_dynamic_partition_overwrite_touches_only_written_partitions(
@@ -75,18 +72,18 @@ def test_dynamic_partition_overwrite_touches_only_written_partitions(
         "order_year", F.year("o_orderdate")
     )
     path = str(tmp_path / "orders_incremental")
-    fmt.write_table(df, path, partition_by=["order_year"])
+    df.write.partitionBy("order_year").parquet(path)
     before_other = (
-        fmt.read_table(spark, path).filter(F.col("order_year") != 1997).count()
+        spark.read.parquet(path).filter(F.col("order_year") != 1997).count()
     )
 
     # "re-ingest" 1997 with a modified value; other years must survive
     repl = df.filter(F.col("order_year") == 1997).withColumn(
         "o_totalprice", F.col("o_totalprice") * 0 + 1.0
     )
-    fmt.write_table(repl, path, partition_by=["order_year"])
+    repl.write.mode("overwrite").partitionBy("order_year").parquet(path)
 
-    back = fmt.read_table(spark, path)
+    back = spark.read.parquet(path)
     assert back.filter(F.col("order_year") != 1997).count() == before_other
     prices = (
         back.filter(F.col("order_year") == 1997)
@@ -98,7 +95,7 @@ def test_dynamic_partition_overwrite_touches_only_written_partitions(
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
-    """ORC rides the same generic writer/reader (fmt='orc') — the
+    """ORC rides the same generic writer/reader (format 'orc') — the
     second columnar interchange format warehouses commonly demand."""
     df = load(spark, sf_dir, "orders")
     _roundtrip(spark, df, str(tmp_path / "o_orc"), "orc")
@@ -109,8 +106,8 @@ def test_orc_pushdown_prunes(spark, sf_dir, tmp_path):
     from mapreducepy_spark.plans import executed_plan
 
     df = load(spark, sf_dir, "orders")
-    fmt.write_table(df, str(tmp_path / "o_orc2"), fmt="orc")
-    back = fmt.read_table(spark, str(tmp_path / "o_orc2"), fmt="orc").filter(
+    df.write.orc(str(tmp_path / "o_orc2"))
+    back = spark.read.orc(str(tmp_path / "o_orc2")).filter(
         F.col("o_orderstatus") == "F"
     )
     plan = executed_plan(back)
@@ -126,9 +123,9 @@ def test_pipeline_manifest_partitioned_by_split_prunes(spark, sf_dir, tmp_path):
 
     manifest = load_catalog()["pipeline_clean_corpus"].builder(spark, sf_dir)
     path = str(tmp_path / "manifest")
-    fmt.write_table(manifest, path, partition_by=["split"])
+    manifest.write.partitionBy("split").parquet(path)
 
-    back = fmt.read_table(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == manifest.count()
 
     train = back.filter(F.col("split") == "train")
@@ -436,19 +433,22 @@ def test_jsonl_census_properties_vs_python_reference(spark, tmp_path):
             assert got_sum == want_sum, (lang, trial)
 
 
-# --- Avro: pure-stdlib cross-writer codec ----------------------------
+# --- Avro: stdlib writer, Spark's reader ---------------------------
 
 
-def test_avro_codec_roundtrips_all_null_shapes(tmp_path):
-    """The stdlib writer/reader pair must round-trip every nullable
-    shape the adversarial corpus carries (NULL in each field, empty
-    string, non-ASCII text whose CHARACTER length differs from its
-    byte length) — bit-level container conformance is what the
-    cross-engine census certifies downstream."""
-    from mapreducepy_spark.sources.avro_source import (
-        read_avro_records,
-        write_avro_documents,
-    )
+def _read_avro(spark, path):
+    from mapreducepy_spark.sources.avro_source import _AVRO_FORMAT
+
+    return spark.read.format(_AVRO_FORMAT).load(path)
+
+
+def test_avro_codec_roundtrips_all_null_shapes(spark, tmp_path):
+    """Spark's Avro reader must read back every nullable shape the
+    stdlib writer emits for the adversarial corpus (NULL in each
+    field, empty string, non-ASCII text whose CHARACTER length differs
+    from its byte length, a long past 32 bits) — bit-level container
+    conformance is what the cross-writer census certifies downstream."""
+    from mapreducepy_spark.sources.avro_source import write_avro_documents
 
     rows = [
         {"doc_id": 0, "text": "", "lang": "en", "source": "web",
@@ -462,83 +462,56 @@ def test_avro_codec_roundtrips_all_null_shapes(tmp_path):
     ] * 700  # > _ROWS_PER_BLOCK: forces the multi-block path
     p = str(tmp_path / "docs.avro")
     write_avro_documents(p, rows)
-    names, back = read_avro_records(open(p, "rb").read())
-    assert names == ["doc_id", "text", "lang", "source", "n_chars"]
-    assert back == rows
-
-
-def test_avro_codec_refuses_unimplemented_features(tmp_path):
-    """The loud-failure contract: unknown codecs and non-subset
-    schemas raise AvroFormatError (a RuntimeError), never
-    mis-decode."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from mapreducepy_spark.sources import avro_source as av
-
-    p = str(tmp_path / "docs.avro")
-    av.write_avro_documents(p, [{"doc_id": 1, "text": "t", "lang": "en",
-                                 "source": "web", "n_chars": 1}])
-    blob = open(p, "rb").read()
-    with _pytest.raises(av.AvroFormatError, match="magic"):
-        av.read_avro_records(b"NOPE" + blob[4:])
-    # forge an unknown codec in the metadata by rewriting the header
-    names, rows = av.read_avro_records(blob)
-    assert rows  # sanity: the original decodes
-    with _pytest.raises(av.AvroFormatError):
-        av._field_decoder({"type": "array", "items": "long"})
-    with _pytest.raises(av.AvroFormatError):
-        av._field_decoder("decimal")
+    back = _read_avro(spark, p)
+    assert back.columns == ["doc_id", "text", "lang", "source", "n_chars"]
+    got = [r.asDict() for r in back.collect()]
+    assert sorted(got, key=repr) == sorted(rows, key=repr)
 
 
 def test_avro_census_plan_is_one_decode_one_agg(spark, sf_dir):
-    """Plan shape: binaryFile scan -> ONE mapInPandas (the decode) ->
-    hash aggregate. No join, no cartesian, and the binaryFile scan
-    must NOT ship path/mtime columns into Python (pruned before
-    mapInPandas — it serializes every input column)."""
+    """Plan shape: the Avro FileScan is the one decode and feeds the
+    hash aggregate directly: no binaryFile scan, no Python node, no
+    join, no cartesian."""
     from mapreducepy_spark.registry import load_catalog
 
     df = load_catalog()["avro_census"].builder(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("FileScan avro") == 1
+    assert "HashAggregate" in plan
+    assert "binaryfile" not in plan.lower()
+    assert "Python" not in plan and "InPandas" not in plan
     assert "CartesianProduct" not in plan
     assert "Join" not in plan
-    assert "modificationTime" not in plan.split("MapInPandas")[0]
 
 
-def test_avro_truncated_varint_raises_format_error():
-    """ADVICE r8: a container truncated MID-VARINT must raise the
-    documented AvroFormatError, never IndexError. Property-checked:
-    every strict prefix of any encoded long either raises
-    AvroFormatError or (when the prefix happens to contain a complete
-    varint) decodes a valid value — it never escapes the contract."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
+_AVRO_CORRUPTIONS = {
+    "bad_magic": lambda b: b"NOPE" + b[4:],
+    "half_truncated": lambda b: b[: len(b) // 2],
+    "last_5_bytes_cut": lambda b: b[:-5],
+    "sync_byte_flipped": lambda b: b[:-1] + bytes([b[-1] ^ 0xFF]),
+}
 
-    from mapreducepy_spark.sources import avro_source as av
 
-    @given(st.integers(min_value=-(2**62), max_value=2**62))
-    @settings(max_examples=200, deadline=None)
-    def roundtrip_and_prefixes(n):
-        enc = av._enc_long(n)
-        r = av._Reader(enc)
-        assert r.long() == n and r.eof()
-        # every strict prefix that still NEEDS continuation bytes
-        # must fail loudly
-        for cut in range(len(enc)):
-            prefix = enc[:cut]
-            rr = av._Reader(prefix)
-            if cut and not (enc[cut - 1] & 0x80):
-                assert rr.long() is not None  # complete varint
-            else:
-                try:
-                    rr.long()
-                except av.AvroFormatError:
-                    pass
-                else:
-                    raise AssertionError(
-                        f"prefix of len {cut} decoded silently"
-                    )
+@pytest.mark.parametrize("corruption", sorted(_AVRO_CORRUPTIONS))
+def test_avro_reader_raises_on_corrupt_container(spark, tmp_path, corruption):
+    """The loud-failure contract: a corrupt container raises, at load
+    (bad magic) or at the first action, never reads short."""
+    from py4j.protocol import Py4JJavaError
 
-    roundtrip_and_prefixes()
+    from mapreducepy_spark.sources.avro_source import write_avro_documents
+
+    rows = [
+        {"doc_id": i, "text": f"doc {i}", "lang": "en", "source": "web",
+         "n_chars": len(f"doc {i}")}
+        for i in range(2500)
+    ]
+    good = tmp_path / "good.avro"
+    write_avro_documents(str(good), rows)
+    assert _read_avro(spark, str(good)).count() == len(rows)
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-0.avro").write_bytes(
+        _AVRO_CORRUPTIONS[corruption](good.read_bytes())
+    )
+    with pytest.raises(Py4JJavaError):
+        _read_avro(spark, str(bad)).count()
